@@ -43,14 +43,11 @@ object Portable {
   def sampleGate(id: Column, rateBps: Int, seed: String): Column =
     pmod(hash60(concat(lit(seed), lit("_"), id.cast("string"))), lit(10000L)) < rateBps
 
-  /** Minhash permutation k: h ↦ (a_k·h + b_k) mod P with
-    * a_k = (k+1)·2654435761 mod P, b_k = (k+7)·976369 mod P.
-    * Same closed form is embedded in the oracle SQL — no literal tables
-    * to keep in sync. a_k < P and h < P ⇒ product < 2^62, no overflow. */
-  def minhashPerm(k: Column, h: Column): Column =
-    pmod(pmod((k + 1) * lit(2654435761L), lit(P)) * h + pmod((k + 7) * lit(976369L), lit(P)), lit(P))
-
-  /** Same permutation with k fixed at plan time (for unrolled plans). */
+  /** Minhash permutation k, fixed at plan time (for unrolled plans):
+    * h ↦ (a_k·h + b_k) mod P with a_k = (k+1)·2654435761 mod P,
+    * b_k = (k+7)·976369 mod P. Same closed form is embedded in the
+    * oracle SQL — no literal tables to keep in sync. a_k < P and
+    * h < P ⇒ product < 2^62, no overflow. */
   def minhashPermAt(k: Int, h: Column): Column = {
     val a = ((k + 1) * 2654435761L) % P
     val b = ((k + 7) * 976369L) % P

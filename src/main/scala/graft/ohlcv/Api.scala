@@ -100,48 +100,32 @@ object Api {
     tailed.orderBy(col("ts"))
   }
 
+  /** Rows of `symbol` in the PARTITIONED normalized table: its
+    * `symbol_clean` partition (only that symbol's directories are
+    * listed) and, within it, the exact raw symbol. */
+  private def ofSymbol(symbol: String): Column =
+    col("symbol_clean") === Storage.cleanSymbol(symbol) && col("symbol") === symbol
+
   /** [[getOhlcv]] straight off the PARTITIONED normalized table — the
-    * form the REST layer runs at scale. The symbol filter hits the
-    * `symbol_clean` PARTITION column (directory pruning: only that
-    * symbol's files are even listed) and the date range becomes plain
-    * `timestamp_unix` bounds (PushedFilters → parquet row-group stats
-    * skipping) BEFORE the ts projection — filtering after
-    * `timestamp_seconds()` would defeat both. Pinned by PlanSpec.
-    * Epoch bounds are computed driver-side in UTC, identical to the
-    * session-UTC `to_timestamp` arithmetic in [[getOhlcv]]. */
+    * form the REST layer runs at scale. The symbol prunes to its
+    * `symbol_clean` directories and the date range to its day
+    * directories plus pushed `timestamp_unix` bounds
+    * ([[Storage.inDateRange]]), BEFORE the ts projection — filtering
+    * after `timestamp_seconds()` would defeat both (a 1-day answer
+    * opened 160 files at the ServeScale ×100 shape without the day
+    * prune, ≤ 3 day directories with it). Pinned by PlanSpec. The UTC
+    * epoch bounds match the session-UTC `to_timestamp` arithmetic in
+    * [[getOhlcv]]. */
   def getOhlcvFromTable(
       normalized: DataFrame,
       symbol: String,
       fromDate: Option[String],
       toDate: Option[String],
-      limit: Option[Int]): DataFrame = {
-    def dayStartUtc(d: String): Long =
-      java.time.LocalDate.parse(d).atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond
-    val clean = symbol.toUpperCase.replaceAll("NSE:|-EQ", "")
-    // The date range must ALSO reach the year/month/day PARTITION
-    // columns, or the scan lists (and foot-reads) every day-directory
-    // of the symbol — measured 160 files opened for a 1-day answer at
-    // the ServeScale ×100 shape, vs the ≤ 3 day-dirs this predicate
-    // leaves. The range is widened ±1 day because the partition
-    // calendar derives from the SESSION timezone while the row filter
-    // is exact UTC epoch bounds — pruning stays a superset of the
-    // answer under any tz skew, and timestamp_unix does the exact cut.
-    val hasDayCols = Seq("year", "month", "day").forall(normalized.columns.contains)
-    def dateInt(d: java.time.LocalDate): Int =
-      d.getYear * 10000 + d.getMonthValue * 100 + d.getDayOfMonth
-    val dayKey = col("year") * 10000 + col("month") * 100 + col("day")
-    val pruned = Seq(
-      Some(col("symbol_clean") === clean && col("symbol") === symbol),
-      fromDate.map(d => col("timestamp_unix") >= dayStartUtc(d)),
-      toDate.map(d => col("timestamp_unix") < dayStartUtc(d) + 86400L),
-      fromDate.filter(_ => hasDayCols)
-        .map(d => dayKey >= dateInt(java.time.LocalDate.parse(d).minusDays(1))),
-      toDate.filter(_ => hasDayCols)
-        .map(d => dayKey <= dateInt(java.time.LocalDate.parse(d).plusDays(1)))
-    ).flatten.reduce(_ && _)
-    getOhlcv(fromNormalized(normalized.filter(pruned)), symbol,
-      fromDate = None, toDate = None, limit) // range already applied, pushably
-  }
+      limit: Option[Int]): DataFrame =
+    getOhlcv(
+      fromNormalized(normalized.filter(
+        ofSymbol(symbol) && Storage.inDateRange(normalized, fromDate, toDate))),
+      symbol, fromDate = None, toDate = None, limit) // range already applied, pushably
 
   /** /alfaquantz resample path (api/api_handler.py:718-727): getOhlcv
     * then interval aggregation (A6) at `interval` (token form). */
@@ -184,9 +168,10 @@ object Api {
 
   /** [[latestSummary]] off the PARTITIONED table WITHOUT scanning any
     * symbol's history: each symbol's newest day comes from the
-    * PARTITION LAYOUT alone ([[Storage.availableDates]], metadata-only
-    * — no data file opened), and the scan is pruned to exactly those
-    * (symbol_clean, year, month, day) directories. Scan rows stay
+    * PARTITION LAYOUT alone ([[Storage.newestDatePerSymbol]],
+    * metadata-only — no data file opened), and the scan is pruned to
+    * exactly those (year, month, day, symbol_clean) directories by one
+    * [[Storage.inPartitions]] set. Scan rows stay
     * ∝ symbols × one day's candles no matter how many years the table
     * holds (ServeScale: constant rows at ×100; PlanSpec-pinned).
     *
@@ -208,47 +193,30 @@ object Api {
     // contribute no row, exactly like symbols absent from the
     // reference's recent files (never a thrown 500).
     val newest = Storage.newestDatePerSymbol(conf, tableDir)
-    val preds = symbols.flatMap { sym =>
-      val clean = sym.toUpperCase.replaceAll("NSE:|-EQ", "")
+    val found = symbols.flatMap { sym =>
+      val clean = Storage.cleanSymbol(sym)
       newest.get(clean).map { d =>
         val ld = java.time.LocalDate.parse(d)
-        col("symbol_clean") === clean && col("symbol") === sym &&
-          col("year") === ld.getYear && col("month") === ld.getMonthValue &&
-          col("day") === ld.getDayOfMonth
+        sym -> Seq(ld.getYear, ld.getMonthValue, ld.getDayOfMonth, clean)
       }
     }
-    val pruned =
-      if (preds.isEmpty) normalized.filter(lit(false))
-      else normalized.filter(preds.reduce(_ || _))
-    latestSummary(fromNormalized(pruned))
+    latestSummary(fromNormalized(normalized.filter(
+      Storage.inPartitions(normalized, Storage.PartCols, found.map(_._2)) &&
+        col("symbol").isin(found.map(_._1): _*))))
   }
 
   /** A2 daily_summary off the PARTITIONED table — the reference's
     * analytics invoke surface (analytics/lambda_analytics.py:174-272)
     * reads EXACTLY the requested date's objects (one S3 prefix list +
-    * per-symbol CSV gets); the Spark-at-scale equivalent is the date
-    * hitting the year/month/day PARTITION columns (directory pruning,
-    * ±1 day superset for tz skew — the [[getOhlcvFromTable]] rule)
-    * plus exact `timestamp_unix` bounds pushed to the parquet reader,
-    * so scan rows stay ∝ symbols × one day's candles no matter how
-    * many days the table holds (ServeScale-measured; PlanSpec-pinned).
-    * Dedup keep-latest-fetch before the rollup (the /ohlcv D2
-    * contract), then the A2 rollup sorted desc by pct change. */
+    * per-symbol CSV gets); the Spark-at-scale equivalent is the
+    * [[Storage.inDateRange]] prune of one day, so scan rows stay
+    * ∝ symbols × one day's candles no matter how many days the table
+    * holds (ServeScale-measured; PlanSpec-pinned). Dedup
+    * keep-latest-fetch before the rollup (the /ohlcv D2 contract), then
+    * the A2 rollup sorted desc by pct change. */
   def dailySummaryFromTable(normalized: DataFrame, date: String): DataFrame = {
-    val ld       = java.time.LocalDate.parse(date)
-    val dayStart = ld.atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond
-    val hasDayCols = Seq("year", "month", "day").forall(normalized.columns.contains)
-    def dateInt(d: java.time.LocalDate): Int =
-      d.getYear * 10000 + d.getMonthValue * 100 + d.getDayOfMonth
-    val dayKey = col("year") * 10000 + col("month") * 100 + col("day")
-    val pruned = Seq(
-      Some(col("timestamp_unix") >= dayStart && col("timestamp_unix") < dayStart + 86400L),
-      if (hasDayCols)
-        Some(dayKey >= dateInt(ld.minusDays(1)) && dayKey <= dateInt(ld.plusDays(1)))
-      else None
-    ).flatten.reduce(_ && _)
     val deduped = Dedup.keepLatest(
-      fromNormalized(normalized.filter(pruned)),
+      fromNormalized(normalized.filter(Storage.inDateRange(normalized, Some(date), Some(date)))),
       keys = Seq(col("symbol"), col("ts")),
       version = Seq(col("fetch_timestamp")))
     Analytics.dailyStats(deduped, col("fetch_timestamp"))
@@ -273,31 +241,16 @@ object Api {
         keys = Seq(col("symbol"), col("ts")), version = Seq(col("fetch_timestamp"))),
       symbol, from, to, col("fetch_timestamp"))
 
-  /** A3 date_range off the PARTITIONED table: the symbol hits the
-    * `symbol_clean` partition column and the range hits year/month/day
-    * (±1-day superset) + exact `timestamp_unix` bounds — the
-    * [[getOhlcvFromTable]] pruning rule applied to the analytics
-    * rollup, so scan rows stay ∝ one symbol × the range's days. */
+  /** A3 date_range off the PARTITIONED table: the
+    * [[getOhlcvFromTable]] symbol and date-range prunes applied to the
+    * analytics rollup, so scan rows stay ∝ one symbol × the range's
+    * days. */
   def dateRangeFromTable(
-      normalized: DataFrame, symbol: String, from: String, to: String): DataFrame = {
-    def dayStartUtc(d: String): Long =
-      java.time.LocalDate.parse(d).atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond
-    val clean = symbol.toUpperCase.replaceAll("NSE:|-EQ", "")
-    val hasDayCols = Seq("year", "month", "day").forall(normalized.columns.contains)
-    def dateInt(d: java.time.LocalDate): Int =
-      d.getYear * 10000 + d.getMonthValue * 100 + d.getDayOfMonth
-    val dayKey = col("year") * 10000 + col("month") * 100 + col("day")
-    val pruned = Seq(
-      Some(col("symbol_clean") === clean && col("symbol") === symbol),
-      Some(col("timestamp_unix") >= dayStartUtc(from) &&
-        col("timestamp_unix") < dayStartUtc(to) + 86400L),
-      if (hasDayCols)
-        Some(dayKey >= dateInt(java.time.LocalDate.parse(from).minusDays(1)) &&
-          dayKey <= dateInt(java.time.LocalDate.parse(to).plusDays(1)))
-      else None
-    ).flatten.reduce(_ && _)
-    dateRangeFrame(fromNormalized(normalized.filter(pruned)), symbol, from, to)
-  }
+      normalized: DataFrame, symbol: String, from: String, to: String): DataFrame =
+    dateRangeFrame(
+      fromNormalized(normalized.filter(
+        ofSymbol(symbol) && Storage.inDateRange(normalized, Some(from), Some(to)))),
+      symbol, from, to)
 
   /** A4 top_movers off the PARTITIONED table
     * (analytics/lambda_analytics.py:360-430 — the reference composes
@@ -330,9 +283,8 @@ object Api {
     else {
       val ld = java.time.LocalDate.parse(newest.valuesIterator.max)
       normalized
-        .filter(
-          col("year") === ld.getYear && col("month") === ld.getMonthValue &&
-            col("day") === ld.getDayOfMonth)
+        .filter(Storage.inPartitions(normalized, Seq("year", "month", "day"),
+          Seq(Seq(ld.getYear, ld.getMonthValue, ld.getDayOfMonth))))
         .select(col("symbol")).distinct().orderBy(col("symbol"))
     }
   }

@@ -200,15 +200,6 @@ object Normalize {
       .select(OhlcvSchemas.normalized.fieldNames.toIndexedSeq.map(col): _*)
   }
 
-  /** Typed view: `Dataset[OhlcvRecord]` over the normalized table, for
-    * compile-time-checked analytics (§1.3: typed where it helps,
-    * DataFrame where schema is dynamic). */
-  def asDataset(normalized: DataFrame): org.apache.spark.sql.Dataset[OhlcvRecord] = {
-    val spark = normalized.sparkSession
-    import spark.implicits._
-    normalized.as[OhlcvRecord]
-  }
-
   /** Canonical candle view of a normalized table — the column contract
     * the analytics/resample/dedup operators consume. */
   def asCandles(normalized: DataFrame): DataFrame =

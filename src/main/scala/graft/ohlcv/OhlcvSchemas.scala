@@ -66,25 +66,6 @@ object OhlcvSchemas {
     StructField("processed_at", StringType)))
 }
 
-/** Typed view of a normalized OHLCV row (for Dataset[OhlcvRecord]). */
-case class OhlcvRecord(
-    symbol: String,
-    symbol_clean: String,
-    resolution: String,
-    timestamp_unix: Long,
-    timestamp_iso: String,
-    open: Double,
-    high: Double,
-    low: Double,
-    close: Double,
-    volume: Long,
-    year: Int,
-    month: Int,
-    day: Int,
-    hour: Int,
-    fetch_timestamp: String,
-    processed_at: String)
-
 /** A bare candle (positional wire format, typed). */
 case class Candle(
     timestamp_unix: Long,

@@ -2,7 +2,7 @@ package graft.ohlcv
 
 import graft.operators.Dedup
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
 
 /** Partitioned storage for the normalized OHLCV table (SURVEY §2.1).
   *
@@ -13,20 +13,79 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * 276-284). Partition pruning then replaces the reference's
   * hand-built S3 key construction (§4) for free.
   *
+  * Partition addressing lives here, once: which directories a read
+  * touches ([[inPartitions]], [[inDateRange]], [[cleanSymbol]]), what
+  * the layout holds ([[availableDates]], [[newestDatePerSymbol]]) and
+  * how a write lays rows out ([[clusteredWrite]]).
+  *
   * Scale notes: partition columns are low-cardinality dates + symbol;
-  * at 100 TB add bucketing on symbol_clean for co-located joins. The
-  * writers deliberately do NOT coalesce — AQE coalesces shuffle
-  * output; for small dimensions call `.coalesce(n)` at the call site
-  * (the reference hard-codes coalesce(4), etl/glue_job.py:201-203).
+  * at 100 TB add bucketing on symbol_clean for co-located joins.
   */
 object Storage {
 
+  /** The served table's partition columns, day-major. */
+  val PartCols: Seq[String] = Seq("year", "month", "day", "symbol_clean")
+
+  /** A client symbol (`NSE:TCS-EQ`, `tcs`) → its `symbol_clean`
+    * partition value; the plain-string twin of the column expression
+    * [[Normalize.cleanSymbol]], case-folded because REST clients send
+    * either case. */
+  def cleanSymbol(symbol: String): String = symbol.toUpperCase.replaceAll("NSE:|-EQ", "")
+
+  /** Writer of a table partitioned by `partCols`, its rows clustered by
+    * those columns first (the `rebalance` hint): every partition tuple
+    * lands in one task, so a write leaves one file per tuple whatever
+    * the input's partitioning or the core count, and AQE may still
+    * split an oversized tuple. Unclustered, each task writes its own
+    * file into every tuple it holds: cores × files per directory, which
+    * every later read lists and opens. */
+  def clusteredWrite(df: DataFrame, partCols: Seq[String]): DataFrameWriter[Row] =
+    df.hint("rebalance", partCols.map(col): _*).write.partitionBy(partCols: _*)
+
+  /** Filter keeping exactly the partition tuples `tuples` of `table`:
+    * one `struct(partCols…) IN (tuples)` test, which Spark keeps as one
+    * flat set lookup in the scan's PartitionFilters however many tuples
+    * there are (an OR of per-tuple equalities nests one level per tuple
+    * and overflows a default thread stack at 300–350 tuples). Each literal
+    * is cast to the table's discovered partition type, so no cast lands
+    * on a column and pruning stays effective. No tuples keep nothing. */
+  def inPartitions(table: DataFrame, partCols: Seq[String], tuples: Seq[Seq[Any]]): Column =
+    if (tuples.isEmpty) lit(false)
+    else {
+      val types = partCols.map(c => table.schema(c).dataType)
+      struct(partCols.map(col): _*).isin(tuples.map { t =>
+        struct(partCols.indices.map(i => lit(t(i)).cast(types(i)).as(partCols(i))): _*)
+      }: _*)
+    }
+
+  /** Filter keeping the candles of the inclusive UTC date range
+    * `from`..`to` (either end open when None): exact `timestamp_unix`
+    * bounds, which reach the parquet reader as pushed filters, plus —
+    * when `table` carries the year/month/day partition columns — the
+    * same range on the calendar key, so the scan lists and opens only
+    * those day directories. The calendar range is widened ±1 day
+    * because the partition calendar derives from the session timezone
+    * while the row bounds are UTC: pruning stays a superset of the
+    * answer under any skew, and `timestamp_unix` makes the exact cut. */
+  def inDateRange(table: DataFrame, from: Option[String], to: Option[String]): Column = {
+    def date(d: String) = java.time.LocalDate.parse(d)
+    def dayStart(d: String): Long = date(d).atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond
+    def dateInt(d: java.time.LocalDate): Int =
+      d.getYear * 10000 + d.getMonthValue * 100 + d.getDayOfMonth
+    val dayKey  = col("year") * 10000 + col("month") * 100 + col("day")
+    val dayCols = Seq("year", "month", "day").forall(table.columns.contains)
+    (from.map(d => col("timestamp_unix") >= dayStart(d)) ++
+      to.map(d => col("timestamp_unix") < dayStart(d) + 86400L) ++
+      from.filter(_ => dayCols).map(d => dayKey >= dateInt(date(d).minusDays(1))) ++
+      to.filter(_ => dayCols).map(d => dayKey <= dateInt(date(d).plusDays(1))))
+      .foldLeft(lit(true))(_ && _)
+  }
+
   /** S9: partitioned snappy parquet sink. */
   def writeParquet(normalized: DataFrame, path: String, mode: String = "append"): Unit =
-    normalized.write
+    clusteredWrite(normalized, PartCols)
       .mode(mode)
       .option("compression", "snappy")
-      .partitionBy("year", "month", "day", "symbol_clean")
       .parquet(path)
 
   /** Parquet scan of the partitioned table (partition discovery gives
@@ -153,14 +212,12 @@ object Storage {
   }
 
   /** Available dates for a symbol from the PARTITION LAYOUT alone
-    * (`quick_api_queries.py:155-188`): globs the
-    * `year=Y/month=M/day=D/symbol_clean=S` directories (the table's
-    * day-major layout) and parses the calendar from the path —
-    * metadata-only, no data file is opened
-    * (a partition-column `distinct` through the scan would still read
-    * parquet footers since Spark removed the metadata-only optimizer
-    * rule for correctness). Newest-first, capped at `limit` — the
-    * reference's exact list-keys-then-cap behavior. */
+    * (`quick_api_queries.py:155-188`, one [[layout]] walk) —
+    * metadata-only, no data file is opened (a partition-column
+    * `distinct` through the scan would still read parquet footers since
+    * Spark removed the metadata-only optimizer rule for correctness).
+    * Newest-first, capped at `limit` — the reference's exact
+    * list-keys-then-cap behavior. */
   def availableDates(
       conf: org.apache.hadoop.conf.Configuration,
       tableDir: String,
@@ -176,47 +233,35 @@ object Storage {
     require(
       symbolClean.nonEmpty && !symbolClean.exists(globMeta.contains(_)),
       s"symbolClean must not contain glob metacharacters ($globMeta): got '$symbolClean'")
-    val pattern = new org.apache.hadoop.fs.Path(
-      s"$tableDir/year=*/month=*/day=*/symbol_clean=$symbolClean")
-    val fs = pattern.getFileSystem(conf)
-    val re = ".*/year=(\\d+)/month=(\\d+)/day=(\\d+)/symbol_clean=[^/]+$".r
-    Option(fs.globStatus(pattern)).getOrElse(Array.empty).toSeq
-      .collect {
-        case st if st.isDirectory =>
-          st.getPath.toUri.getPath match {
-            case re(y, m, d) => Some(f"${y.toInt}%04d-${m.toInt}%02d-${d.toInt}%02d")
-            case _           => None
-          }
-      }
-      .flatten.distinct.sorted(Ordering[String].reverse).take(limit)
+    layout(conf, tableDir, symbolClean).map(_._2)
+      .distinct.sorted(Ordering[String].reverse).take(limit)
   }
 
-  /** NEWEST date per symbol from ONE layout walk — the /latest
-    * discovery primitive: globbing the day-major layout once
-    * (`year=* / month=* / day=* / symbol_clean=*`, no spaces) and
-    * folding to each symbol's max date costs one listing no matter
-    * how many symbols are asked for, where per-symbol
-    * [[availableDates]] calls would cost symbols × layout.
-    * Metadata-only; no data file opened. */
+  /** NEWEST date per symbol from ONE [[layout]] walk — the /latest
+    * discovery primitive: one listing no matter how many symbols are
+    * asked for, where per-symbol [[availableDates]] calls would cost
+    * symbols × layout. Metadata-only; no data file opened. */
   def newestDatePerSymbol(
       conf: org.apache.hadoop.conf.Configuration,
-      tableDir: String): Map[String, String] = {
+      tableDir: String): Map[String, String] =
+    layout(conf, tableDir, "*").groupMapReduce(_._1)(_._2)(Ordering[String].max)
+
+  /** The (symbol_clean, yyyy-MM-dd) leaves of the day-major layout
+    * `year=Y/month=M/day=D/symbol_clean=S` under `tableDir` whose
+    * symbol matches the glob `symbolGlob`, from one glob of the
+    * directories; the calendar is parsed from the path. */
+  private def layout(
+      conf: org.apache.hadoop.conf.Configuration,
+      tableDir: String,
+      symbolGlob: String): Seq[(String, String)] = {
     val pattern = new org.apache.hadoop.fs.Path(
-      s"$tableDir/year=*/month=*/day=*/symbol_clean=*")
+      s"$tableDir/year=*/month=*/day=*/symbol_clean=$symbolGlob")
     val fs = pattern.getFileSystem(conf)
     val re = ".*/year=(\\d+)/month=(\\d+)/day=(\\d+)/symbol_clean=([^/]+)$".r
     Option(fs.globStatus(pattern)).getOrElse(Array.empty).toSeq
-      .collect {
-        case st if st.isDirectory =>
-          st.getPath.toUri.getPath match {
-            case re(y, m, d, sym) =>
-              Some(sym -> f"${y.toInt}%04d-${m.toInt}%02d-${d.toInt}%02d")
-            case _ => None
-          }
-      }
-      .flatten
-      .groupBy(_._1)
-      .map { case (sym, ds) => sym -> ds.map(_._2).max }
+      .filter(_.isDirectory)
+      .map(_.getPath.toUri.getPath)
+      .collect { case re(y, m, d, sym) => sym -> f"${y.toInt}%04d-${m.toInt}%02d-${d.toInt}%02d" }
   }
 
   /** S7: partitioned gzip CSV sink (header, reference column order). */

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.ohlcv.Storage
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -13,9 +14,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * Both operators follow the same discipline:
   *   1. decide the affected partition set from METADATA or from the
   *      (small) update batch — never a full-table scan;
-  *   2. read ONLY those partitions (a partition-column `isin` filter,
-  *      which Spark turns into partition pruning — the same mechanism
-  *      pinned in PlanSpec for the OHLCV table);
+  *   2. read ONLY those partitions (one [[Storage.inPartitions]] set
+  *      filter, which Spark turns into partition pruning — the same
+  *      mechanism pinned in PlanSpec for the OHLCV table);
   *   3. rewrite ONLY those partitions via dynamic partition overwrite
   *      (`partitionOverwriteMode=dynamic`), leaving every other
   *      partition's files physically untouched.
@@ -27,9 +28,11 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   */
 object Maintenance {
 
-  /** Hard ceiling on an upsert batch's distinct-partition fan-out —
-    * the touched set turns into an OR-of-ANDs pruning predicate, which
-    * must stay far below Catalyst-pathological sizes. */
+  /** Hard ceiling on an upsert batch's distinct-partition fan-out. The
+    * touched tuples are collected, carried as literals in the scan's
+    * partition filter and rewritten by one dynamic-overwrite job; past
+    * a few thousand a batch is a bulk rewrite, which belongs to
+    * [[bootstrapTable]] or [[compactPartitions]], not to a merge. */
   val MaxUpsertPartitionFanout = 4096
 
   /** Partition-pruned upsert: merge `updates` into the parquet table
@@ -54,10 +57,11 @@ object Maintenance {
   /** [[upsertPartitions]] over a COMPOSITE partition key — e.g. a
     * serving table laid out `(day, symbol_clean)` so the REST layer's
     * symbol+range filters prune at the directory level. The touched
-    * set is the batch's distinct partition TUPLES; pruning is the
-    * exact OR-of-ANDs over those tuples (all partition-column
-    * predicates — Spark prunes directories, never lists untouched
-    * ones). Returns the rewritten tuples. */
+    * set is the batch's distinct partition TUPLES; pruning is one
+    * [[Storage.inPartitions]] set over them (Spark reads only those
+    * directories). The merged rows are written clustered by tuple
+    * ([[Storage.clusteredWrite]]): one file per rewritten tuple.
+    * Returns the rewritten tuples. */
   def upsertPartitions(
       spark: SparkSession,
       path: String,
@@ -73,18 +77,11 @@ object Maintenance {
     val touched = updates.select(partCols.map(col): _*).distinct()
       .collect().map(_.toSeq).toIndexedSeq
     if (touched.isEmpty) return touched
-    // the touched set becomes an OR-of-ANDs pruning predicate — fine
-    // for a sane ingest batch, catastrophic past a few thousand terms
-    // (Catalyst predicate size, driver memory): fail loudly instead
     require(touched.size <= MaxUpsertPartitionFanout,
       s"upsert batch touches ${touched.size} partitions (> $MaxUpsertPartitionFanout); " +
         "split the batch or coarsen the partition key")
-    val pruning = touched
-      .map(tuple =>
-        partCols.zip(tuple).map { case (c, v) => col(c) === lit(v) }.reduce(_ && _))
-      .reduce(_ || _)
-    val existing = spark.read.parquet(path)
-      .filter(pruning) // partition pruning: only touched dirs are read
+    val table    = spark.read.parquet(path)
+    val existing = table.filter(Storage.inPartitions(table, partCols, touched))
     // updates win ties via a side marker ordered AFTER version
     val merged = Dedup.keepLatest(
       existing.withColumn("__src", lit(0))
@@ -94,10 +91,9 @@ object Maintenance {
       .drop("__src")
     // per-write dynamic option, NOT a session conf set (a leaked
     // session-level 'dynamic' would change unrelated static writes)
-    merged.write
+    Storage.clusteredWrite(merged, partCols)
       .mode("overwrite") // dynamic: replaces ONLY partitions present in `merged`
       .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCols: _*)
       .parquet(path)
     touched
   }
@@ -113,15 +109,16 @@ object Maintenance {
       version: String): Unit =
     bootstrapTable(batch, path, Seq(partCol), keyCols, version)
 
-  /** [[bootstrapTable]] over a composite partition key. */
+  /** [[bootstrapTable]] over a composite partition key, one file per
+    * partition tuple ([[Storage.clusteredWrite]]). */
   def bootstrapTable(
       batch: DataFrame,
       path: String,
       partCols: Seq[String],
       keyCols: Seq[String],
       version: String): Unit =
-    Dedup.keepLatest(batch, keyCols.map(col), Seq(col(version)))
-      .write.mode("overwrite").partitionBy(partCols: _*).parquet(path)
+    Storage.clusteredWrite(Dedup.keepLatest(batch, keyCols.map(col), Seq(col(version))), partCols)
+      .mode("overwrite").parquet(path)
 
   /** Per-partition file census of a Hive-partitioned table — the
     * metadata scan both maintenance ops and a human operator consult.
@@ -261,16 +258,12 @@ object Maintenance {
       }
     todo.foreach { case (partPath, _, nOut) =>
       val table = spark.read.parquet(path)
-      // `day=2024-01-01/sym=A` → per-segment equality predicates, each
-      // a literal cast to the DISCOVERED partition type (not a cast on
-      // the column) so partition pruning stays effective
-      val pred = partPath.split("/").toIndexedSeq
-        .map { seg =>
-          val Array(c, v) = seg.split("=", 2)
-          val decoded = java.net.URLDecoder.decode(v, "UTF-8")
-          col(c) === lit(decoded).cast(table.schema(c).dataType)
-        }
-        .reduce(_ && _)
+      // `day=2024-01-01/sym=A` → the one tuple (2024-01-01, A)
+      val (cols, values) = partPath.split("/").toIndexedSeq.map { seg =>
+        val Array(c, v) = seg.split("=", 2)
+        c -> java.net.URLDecoder.decode(v, "UTF-8")
+      }.unzip
+      val pred = Storage.inPartitions(table, cols, Seq(values))
       // per-write dynamic option, NOT a session conf set — a leaked
       // session-level 'dynamic' would silently change unrelated
       // static-overwrite writes for the rest of the job
@@ -283,23 +276,6 @@ object Maintenance {
     }
     todo.toIndexedSeq.toDF("partition", "files_before", "files_target")
   }
-
-  // ---- Streaming-gate index maintenance -----------------------------
-
-  /** Fold a gate index's per-batch commit MARKERS into its checkpoint
-    * object ([[graft.streaming.IndexRead.compactCommits]]) — run at
-    * the same cadence as [[compactPartitions]]; returns markers
-    * deleted. */
-  def compactIndexCommits(spark: SparkSession, indexDir: String): Int =
-    graft.streaming.IndexRead.compactCommits(spark, indexDir)
-
-  /** Fold a gate index's per-batch DATA partitions (ids ≤ `upToBatch`,
-    * which must trail the stream's newest committed batch) into the
-    * generational base partition
-    * ([[graft.streaming.IndexRead.compactIndex]]); returns partitions
-    * folded. */
-  def compactIndexPartitions(spark: SparkSession, indexDir: String, upToBatch: Long): Int =
-    graft.streaming.IndexRead.compactIndex(spark, indexDir, upToBatch)
 
   // ---- Incremental materialized-aggregate maintenance --------------
 

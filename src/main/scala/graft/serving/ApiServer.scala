@@ -107,12 +107,13 @@ object ApiServer {
     def dateRange(symbol: String, from: String, to: String): DataFrame =
       Api.dateRangeFrame(frame(), symbol, from, to)
   }
-  /** Serves the PARTITIONED normalized parquet table directly:
-    * [[Api.getOhlcvFromTable]] turns the symbol into a partition-prune
-    * on `symbol_clean` and the date range into pushed `timestamp_unix`
-    * bounds — the plan a 100 TB table needs (PlanSpec-pinned). The
-    * path is re-read per request, so newly landed files appear without
-    * a restart. */
+  /** Serves the PARTITIONED normalized parquet table directly: every
+    * route reads only the directories its answer lives in, addressed
+    * through [[graft.ohlcv.Storage]] — the symbol's `symbol_clean`
+    * directories, the requested days (plus pushed `timestamp_unix`
+    * bounds), or for /latest one set of (day, symbol) tuples — the plan
+    * a 100 TB table needs (PlanSpec-pinned). The path is re-read per
+    * request, so newly landed files appear without a restart. */
   private final class TableSource(
       spark: org.apache.spark.sql.SparkSession, path: String) extends Source {
     private def table = spark.read.parquet(path)

@@ -39,10 +39,6 @@ object Notify {
     ()
   }
 
-  /** Stderr transport (operator console). */
-  def logNotifier: Notifier = (subject, message) =>
-    System.err.println(s"[notify] $subject\n$message")
-
   /** LIVE webhook transport — the self-hosted equivalent of the
     * reference's SNS publish (etl/glue_job.py:283-317): POST
     * `{"subject":…,"message":…}` JSON to `url` over

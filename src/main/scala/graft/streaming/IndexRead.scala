@@ -685,12 +685,4 @@ private[graft] object IndexRead {
             s"next tick retries: $e")
     }
   }
-
-  /** Raw dir-exists read (no manifest resolution) — kept for monitors
-    * that want the whole directory, not the gate-visible view. */
-  def parquetIfExists(spark: SparkSession, dir: String)(empty: => DataFrame): DataFrame = {
-    val p      = new org.apache.hadoop.fs.Path(dir)
-    val exists = fs(spark, p).exists(p)
-    if (exists) spark.read.parquet(dir) else empty
-  }
 }

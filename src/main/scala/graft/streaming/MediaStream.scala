@@ -225,22 +225,6 @@ object MediaStream {
     } finally { kfHashes.unpersist(); () }
   }
 
-  /** Wire [[keyframeVetoGatedBatchSink]] onto a video stream. */
-  def startKeyframeVetoIngest(
-      media: DataFrame,
-      historyDir: String,
-      imageIndexDir: String,
-      checkpointDir: String,
-      maxHamming: Int,
-      everyK: Int = 4,
-      bands: Int = 8,
-      cadence: IndexRead.Cadence = IndexRead.Cadence()): StreamingQuery =
-    media.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(keyframeVetoGatedBatchSink(
-        historyDir, imageIndexDir, maxHamming, everyK, bands, cadence))
-      .start()
-
   /** Shared gate body over a (doc_id, sh) fingerprint relation — the
     * image, audio and video sinks differ ONLY in how `sh` is computed. */
   private def hammingGateAndLand(
@@ -297,19 +281,6 @@ object MediaStream {
       IndexRead.maintainAfterCommit(spark, historyDir, batchId, cadence)
     } finally { hashed.unpersist(); () }
   }
-
-  /** Wire [[audioGatedBatchSink]] onto a media stream. */
-  def startAudioIngest(
-      media: DataFrame,
-      historyDir: String,
-      checkpointDir: String,
-      maxHamming: Int,
-      bands: Int = 8,
-      cadence: IndexRead.Cadence = IndexRead.Cadence()): StreamingQuery =
-    media.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(audioGatedBatchSink(historyDir, maxHamming, bands, cadence))
-      .start()
 
   /** Wire [[aHashGatedBatchSink]] onto a media stream. */
   def startAHashIngest(

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.operators.Similarity
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** INCREMENTAL paired-dataset curation — the streaming twin of q210's
@@ -115,31 +114,6 @@ object PairStream {
     val cp = IndexRead.committedParquet(spark, captionPairsDir, -999L)(emptyPairs)
     val ip = IndexRead.committedParquet(spark, imagePairsDir, -999L)(emptyPairs)
     cp.unionByName(ip).select(col("a_id"), col("b_id"), col("cos_ppm")).distinct()
-  }
-
-  /** Wire both sinks onto their streams. */
-  def startPairMining(
-      captions: DataFrame,
-      images: DataFrame,
-      captionIndexDir: String,
-      imageIndexDir: String,
-      captionPairsDir: String,
-      imagePairsDir: String,
-      checkpointRoot: String,
-      codebook: DataFrame,
-      maxCellCompare: Option[Long] = None,
-      cadence: IndexRead.Cadence = IndexRead.Cadence()): (StreamingQuery, StreamingQuery) = {
-    val cq = captions.writeStream
-      .option("checkpointLocation", s"$checkpointRoot/captions")
-      .foreachBatch(captionPairBatchSink(
-        captionIndexDir, imageIndexDir, captionPairsDir, codebook, maxCellCompare, cadence))
-      .start()
-    val iq = images.writeStream
-      .option("checkpointLocation", s"$checkpointRoot/images")
-      .foreachBatch(imagePairBatchSink(
-        imageIndexDir, captionIndexDir, imagePairsDir, codebook, maxCellCompare, cadence))
-      .start()
-    (cq, iq)
   }
 
   // ---- shared plumbing --------------------------------------------------

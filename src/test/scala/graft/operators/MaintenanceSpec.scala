@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class MaintenanceSpec extends SparkSpec {
@@ -11,6 +12,62 @@ class MaintenanceSpec extends SparkSpec {
     fs.listStatus(new Path(path, sub))
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
       .map(f => (f.getPath.getName, f.getModificationTime)).toIndexedSeq.sortBy(_._1)
+  }
+
+  /** Every partition directory of the table at `path` (relative Hive
+    * path, `day=2024-01-01/sym=A`) → its parquet (name, mtime) list. */
+  private def partitionFiles(path: String): Map[String, Seq[(String, Long)]] = {
+    val fs   = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = fs.makeQualified(new Path(path)).toString + "/"
+    val it   = fs.listFiles(new Path(path), true)
+    val files = Seq.newBuilder[(String, (String, Long))]
+    while (it.hasNext) {
+      val f = it.next()
+      if (f.getPath.getName.endsWith(".parquet"))
+        files += (f.getPath.getParent.toString.stripPrefix(root) ->
+          (f.getPath.getName -> f.getModificationTime))
+    }
+    files.result().groupMap(_._1)(_._2).map { case (d, ls) => d -> ls.sortBy(_._1) }
+  }
+
+  /** Runs `body` on a thread of its own with the JVM's default stack
+    * size, as a streaming writer thread runs the upsert, and returns
+    * its result with the partitions read by the file scans of the
+    * queries it ran (the scans' "number of partitions read"). */
+  private def onWriterThread[T](body: => T): (T, Long) = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def nodes(p: SparkPlan): Seq[SparkPlan] =
+      (p +: p.children.flatMap(nodes)) ++ (p match {
+        case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+        case q: QueryStageExec        => nodes(q.plan)
+        case _                        => Seq.empty
+      })
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = {
+        plans.add(qe.executedPlan); ()
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    var out: Either[Throwable, T] = null
+    spark.listenerManager.register(listener)
+    try {
+      val t = new Thread(() => out = try Right(body) catch { case e: Throwable => Left(e) })
+      t.start()
+      t.join()
+      // the write's command event is delivered asynchronously
+      val deadline = System.currentTimeMillis() + 10000
+      while (out.isRight && !plans.toArray.exists(_.toString.contains("InsertIntoHadoopFsRelation")) &&
+        System.currentTimeMillis() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    val read = plans.toArray(Array.empty[SparkPlan]).toSeq.flatMap(nodes)
+      .collect { case sc: FileSourceScanExec => sc }.distinct
+      .map(_.metrics("numPartitions").value).sum
+    // an Error (the stack overflow) is reported as this test's failure,
+    // not rethrown as one that aborts the suite
+    (out.fold(e => fail(s"the writer thread threw $e", e), identity), read)
   }
 
   test("upsertPartitions: merge semantics + untouched partitions keep their exact files") {
@@ -61,29 +118,87 @@ class MaintenanceSpec extends SparkSpec {
 
   test("upsertPartitions composite key: only touched (day, sym) tuples rewritten; other symbol same day untouched") {
     val s = spark; import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("upsert_comp").toString + "/t"
-    Seq(
-      ("2024-01-01", "A", 1L, "a", 10L),
-      ("2024-01-01", "B", 2L, "b", 10L),
-      ("2024-01-02", "A", 3L, "c", 10L))
-      .toDF("day", "sym", "id", "payload", "v")
-      .write.partitionBy("day", "sym").parquet(dir)
-    val beforeB  = fileList(dir, "day=2024-01-01/sym=B")
-    val beforeA2 = fileList(dir, "day=2024-01-02/sym=A")
-
-    // touches ONLY the (2024-01-01, A) tuple — same-day symbol B and
-    // same-symbol other-day partitions must keep their exact files
-    val touched = Maintenance.upsertPartitions(
-      spark, dir,
+    // (table, update batch, partition columns). The small case touches
+    // only (2024-01-01, A): same-day symbol B and same-symbol other-day
+    // partitions must keep their exact files. The wide case is one
+    // intraday fetch of a 500-symbol universe: it touches 500 of the
+    // 610 (year, month, day, symbol_clean) tuples, with newer versions
+    // for even symbols, older ones for odd symbols and one new key each.
+    val small = (
+      Seq(
+        ("2024-01-01", "A", 1L, "a", 10L),
+        ("2024-01-01", "B", 2L, "b", 10L),
+        ("2024-01-02", "A", 3L, "c", 10L)).toDF("day", "sym", "id", "payload", "v"),
       Seq(("2024-01-01", "A", 1L, "a2", 20L)).toDF("day", "sym", "id", "payload", "v"),
-      Seq("day", "sym"), Seq("id"), "v")
-    assert(touched === Seq(Seq("2024-01-01", "A")))
+      Seq("day", "sym"))
+    val wideCols = Seq("year", "month", "day", "symbol_clean", "id", "payload", "v")
+    val wide = (
+      ((0 until 600).map(i => (2025, 10, 8, f"S$i%03d", i.toLong, "old", 10L)) ++
+        (0 until 10).map(i => (2025, 10, 7, f"S$i%03d", 1000L + i, "prev", 10L)))
+        .toDF(wideCols: _*),
+      (0 until 500).flatMap { i =>
+        Seq((2025, 10, 8, f"S$i%03d", i.toLong, "upd", if (i % 2 == 0) 20L else 5L),
+          (2025, 10, 8, f"S$i%03d", 2000L + i, "new", 20L))
+      }.toDF(wideCols: _*),
+      Seq("year", "month", "day", "symbol_clean"))
 
-    val got = spark.read.parquet(dir)
-      .select("id", "payload").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(got === Map(1L -> "a2", 2L -> "b", 3L -> "c"))
-    assert(fileList(dir, "day=2024-01-01/sym=B") === beforeB)
-    assert(fileList(dir, "day=2024-01-02/sym=A") === beforeA2)
+    for ((table, updates, partCols) <- Seq(small, wide)) {
+      val dir = java.nio.file.Files.createTempDirectory("upsert_comp").toString + "/t"
+      table.write.partitionBy(partCols: _*).parquet(dir)
+      val before = partitionFiles(dir)
+      def hivePath(tuple: Seq[Any]) = partCols.zip(tuple).map { case (c, v) => s"$c=$v" }.mkString("/")
+      val batchTuples = updates.select(partCols.map(col): _*).distinct().collect()
+        .map(r => hivePath(r.toSeq)).toSet
+
+      val (touched, partitionsRead) = onWriterThread(
+        Maintenance.upsertPartitions(spark, dir, updates, partCols, Seq("id"), "v"))
+      assert(touched.map(hivePath).toSet === batchTuples)
+      // the scan read only the touched directories
+      assert(partitionsRead === batchTuples.intersect(before.keySet).size.toLong)
+
+      // greater version wins per key; the update wins a tie
+      def rows(df: DataFrame, side: Int) = df.select("id", "payload", "v").collect()
+        .map(r => (r.getLong(0), (r.getLong(2), side, r.getString(1))))
+      val expected = (rows(table, 0) ++ rows(updates, 1))
+        .groupMapReduce(_._1)(_._2)((a, b) => Seq(a, b).maxBy(w => (w._1, w._2)))
+        .map { case (id, w) => id -> w._3 }
+      val got = spark.read.parquet(dir)
+        .select("id", "payload").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(got === expected)
+      val after = partitionFiles(dir)
+      (before.keySet -- batchTuples).foreach(d => assert(after(d) === before(d), d))
+    }
+  }
+
+  test("writers of a partitioned table leave one file per partition tuple whatever the input's partitioning") {
+    val s = spark; import s.implicits._
+    import graft.ohlcv.Storage
+    val base = java.nio.file.Files.createTempDirectory("one_file").toString
+    // 6 (day, symbol) tuples × 40 candles, each tuple's rows spread
+    // round-robin over 8 input partitions
+    def candles(version: Long) = (for {
+      d <- Seq(7, 8); sym <- Seq("A", "B", "C"); t <- 0 until 40
+    } yield (2025, 10, d, sym, t.toLong, version)).toDF(
+      "year", "month", "day", "symbol_clean", "timestamp_unix", "fetch_timestamp").repartition(8)
+    def filesPerTuple(dir: String): Map[String, Long] =
+      Maintenance.partitionFileStats(spark, dir, Storage.PartCols)
+        .collect().map(r => r.getString(0) -> r.getAs[Long]("n_files")).toMap
+    val keys = Seq("symbol_clean", "timestamp_unix")
+    // the keyed dedup shuffle must reach the writers uncoalesced
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalesce, "false")
+    try {
+      Storage.writeParquet(candles(1L), s"$base/etl", "overwrite")
+      Maintenance.bootstrapTable(candles(1L), s"$base/up", Storage.PartCols, keys, "fetch_timestamp")
+      assert(filesPerTuple(s"$base/etl").size === 6)
+      assert(filesPerTuple(s"$base/etl").values.toSet === Set(1L))
+      assert(filesPerTuple(s"$base/up").values.toSet === Set(1L))
+      Maintenance.upsertPartitions(spark, s"$base/up", candles(2L).filter(col("day") === 8),
+        Storage.PartCols, keys, "fetch_timestamp")
+      assert(filesPerTuple(s"$base/up").size === 6)
+      assert(filesPerTuple(s"$base/up").values.toSet === Set(1L))
+      assert(spark.read.parquet(s"$base/up").filter(col("fetch_timestamp") === 2L).count() === 120L)
+    } finally spark.conf.unset(coalesce)
   }
 
   test("compactPartitions: only fragmented partitions rewritten, contents preserved") {
