@@ -114,19 +114,21 @@ object ServeScale {
       measure("/analytics/daily_summary", () => serveDailySummary())
       measure("/analytics/top_movers", () => serveTopMovers())
 
-      // the maintenance story closing the file-count gap: micro-batch
-      // writers leave several files per day-partition (8 per partition
-      // at ×100 — 240 files for /latest's 30 one-partition answers);
-      // one worst-first compaction pass rewrites fragmented partitions
-      // to a single file and /latest opens exactly one file per symbol
+      // the maintenance pass over the served table: the ETL above
+      // writes through Storage.clusteredWrite, one file per (day,
+      // symbol) tuple, so this worst-first pass finds nothing to
+      // rewrite (compacted_partitions 0) and the *_compacted rows
+      // repeat the ones above. An append writer (parquetSink,
+      // OhlcvStream.appendBatch) leaves one file per batch per tuple;
+      // there the same pass rewrites each fragmented tuple to one file
       val compacted = graft.operators.Maintenance.compactPartitions(
         spark, s"$dir/table", Seq("year", "month", "day", "symbol_clean"),
         maxFiles = 1, targetBytes = 128L << 20, maxPartitionsPerRun = 1024)
         .count()
       println(s"""{"scale":"$label","compacted_partitions":$compacted}""")
       measure("/latest_compacted", () => serveLatest())
-      // the same pass fixes the analytics fan-out: scan_files drops to
-      // symbols × the ±1-day superset (one object per partition)
+      // on a compacted table the analytics scan opens symbols × the
+      // ±1-day superset (one object per partition)
       measure("/analytics/daily_summary_compacted", () => serveDailySummary())
 
       // the COMPOSED /dashboard endpoint over real HTTP — it fans into

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * The reference schedules all of this externally
   * (`infra/main-mvp.tf:464-515` — EventBridge crons firing the fetch /
   * ETL / monitor Lambdas); here the triggers are in-band
-  * ([[OhlcvStream.upsertBatch]]'s compactEvery tick and
+  * ([[OhlcvStream.appendBatch]]'s compactEvery tick and
   * [[IndexRead.maintainAfterCommit]]'s Cadence), so the proof is one
   * loop per arm driving the EXACT production batch bodies.
   *

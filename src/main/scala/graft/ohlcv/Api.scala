@@ -167,9 +167,12 @@ object Api {
           struct(col("ts"), col("fetch_timestamp"))).as("last"))
 
   /** [[latestSummary]] off the PARTITIONED table WITHOUT scanning any
-    * symbol's history: each symbol's newest day comes from the
-    * PARTITION LAYOUT alone ([[Storage.newestDatePerSymbol]],
-    * metadata-only — no data file opened), and the scan is pruned to
+    * symbol's history: each symbol's newest day comes from the file
+    * listing `normalized` was opened with ([[Storage
+    * .newestDatePerSymbol]], metadata-only — no data file opened, and
+    * the same snapshot the scan reads, so an upsert committing
+    * mid-request cannot name a day the scan lacks; `conf` and
+    * `tableDir` are not consulted), and the scan is pruned to
     * exactly those (year, month, day, symbol_clean) directories by one
     * [[Storage.inPartitions]] set. Scan rows stay
     * ∝ symbols × one day's candles no matter how many years the table
@@ -179,20 +182,20 @@ object Api {
     * the recent raw files (api/api_handler.py:451-477 lists the last
     * N days capped at 50 objects), so the envelope's `total_candles`
     * is scoped to what was read — here, the newest landed day per
-    * symbol. Symbols absent from the layout contribute no row, exactly
+    * symbol. Symbols absent from the table contribute no row, exactly
     * like symbols absent from the reference's recent files. */
   def latestSummaryFromTable(
       normalized: DataFrame,
       conf: org.apache.hadoop.conf.Configuration,
       tableDir: String,
       symbols: Seq[String]): DataFrame = {
-    // ONE layout walk answers every symbol's newest day (per-symbol
-    // availableDates globs would cost symbols × layout listings).
-    // Symbols absent from the map — including empty or
+    // ONE pass over the open's listing answers every symbol's newest day
+    // (per-symbol availableDates globs would cost symbols × layout
+    // listings). Symbols absent from the map — including empty or
     // glob-metacharacter garbage a client might send — simply
     // contribute no row, exactly like symbols absent from the
     // reference's recent files (never a thrown 500).
-    val newest = Storage.newestDatePerSymbol(conf, tableDir)
+    val newest = Storage.newestDatePerSymbol(normalized)
     val found = symbols.flatMap { sym =>
       val clean = Storage.cleanSymbol(sym)
       newest.get(clean).map { d =>
@@ -267,9 +270,10 @@ object Api {
 
   /** Default /latest symbol list for a table-backed server: distinct
     * symbols scanned from the table's NEWEST landed day only — the
-    * date comes from the partition layout ([[Storage.newestDatePerSymbol]],
-    * metadata-only) and the scan prunes to that one day, so cost is
-    * one day × symbols regardless of table history. The reference
+    * date comes from the listing `normalized` was opened with
+    * ([[Storage.newestDatePerSymbol]], metadata-only; `conf` and
+    * `tableDir` are not consulted) and the scan prunes to that one day,
+    * so cost is one day × symbols regardless of table history. The reference
     * derives its default list from recent files the same way
     * (api/api_handler.py:451-477); the frame-side `Api.symbols`
     * distinct would scan the WHOLE table just to enumerate names. */
@@ -277,7 +281,7 @@ object Api {
       normalized: DataFrame,
       conf: org.apache.hadoop.conf.Configuration,
       tableDir: String): DataFrame = {
-    val newest = Storage.newestDatePerSymbol(conf, tableDir)
+    val newest = Storage.newestDatePerSymbol(normalized)
     if (newest.isEmpty)
       normalized.select(col("symbol")).filter(lit(false)).distinct()
     else {

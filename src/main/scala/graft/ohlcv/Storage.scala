@@ -237,14 +237,23 @@ object Storage {
       .distinct.sorted(Ordering[String].reverse).take(limit)
   }
 
-  /** NEWEST date per symbol from ONE [[layout]] walk — the /latest
-    * discovery primitive: one listing no matter how many symbols are
-    * asked for, where per-symbol [[availableDates]] calls would cost
-    * symbols × layout. Metadata-only; no data file opened. */
-  def newestDatePerSymbol(
-      conf: org.apache.hadoop.conf.Configuration,
-      tableDir: String): Map[String, String] =
-    layout(conf, tableDir, "*").groupMapReduce(_._1)(_._2)(Ordering[String].max)
+  /** NEWEST date per symbol among the files of the opened `table` — the
+    * /latest discovery primitive. It reads the listing the open already
+    * took, so it names only days the same frame's scan holds: a commit
+    * landing after the open cannot add a day the scan then lacks.
+    * Metadata-only; no data file opened, no second listing. */
+  def newestDatePerSymbol(table: DataFrame): Map[String, String] =
+    table.inputFiles.toSeq
+      .map(f => new org.apache.hadoop.fs.Path(f).getParent.toUri.getPath)
+      .collect(leafDate)
+      .groupMapReduce(_._1)(_._2)(Ordering[String].max)
+
+  private val Leaf = ".*/year=(\\d+)/month=(\\d+)/day=(\\d+)/symbol_clean=([^/]+)$".r
+
+  /** (symbol_clean, yyyy-MM-dd) of a `…/year=Y/month=M/day=D/symbol_clean=S` leaf path. */
+  private val leafDate: PartialFunction[String, (String, String)] = {
+    case Leaf(y, m, d, sym) => sym -> f"${y.toInt}%04d-${m.toInt}%02d-${d.toInt}%02d"
+  }
 
   /** The (symbol_clean, yyyy-MM-dd) leaves of the day-major layout
     * `year=Y/month=M/day=D/symbol_clean=S` under `tableDir` whose
@@ -257,11 +266,10 @@ object Storage {
     val pattern = new org.apache.hadoop.fs.Path(
       s"$tableDir/year=*/month=*/day=*/symbol_clean=$symbolGlob")
     val fs = pattern.getFileSystem(conf)
-    val re = ".*/year=(\\d+)/month=(\\d+)/day=(\\d+)/symbol_clean=([^/]+)$".r
     Option(fs.globStatus(pattern)).getOrElse(Array.empty).toSeq
       .filter(_.isDirectory)
       .map(_.getPath.toUri.getPath)
-      .collect { case re(y, m, d, sym) => sym -> f"${y.toInt}%04d-${m.toInt}%02d-${d.toInt}%02d" }
+      .collect(leafDate)
   }
 
   /** S7: partitioned gzip CSV sink (header, reference column order). */

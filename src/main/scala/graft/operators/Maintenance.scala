@@ -4,6 +4,7 @@ import graft.ohlcv.Storage
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Table maintenance for partitioned parquet tables: partition-pruned
   * upsert (merge-on-write) and small-file compaction. Extension beyond
@@ -12,14 +13,18 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * partitions the batch touches".
   *
   * Both operators follow the same discipline:
-  *   1. decide the affected partition set from METADATA or from the
-  *      (small) update batch — never a full-table scan;
-  *   2. read ONLY those partitions (one [[Storage.inPartitions]] set
-  *      filter, which Spark turns into partition pruning — the same
-  *      mechanism pinned in PlanSpec for the OHLCV table);
-  *   3. rewrite ONLY those partitions via dynamic partition overwrite
+  *   1. decide the affected partition tuples from the update batch
+  *      (evaluated once) or from the file census — never a full-table
+  *      scan;
+  *   2. open the table once and read ONLY those tuples through one
+  *      [[Storage.inPartitions]] set filter, which Spark turns into
+  *      partition pruning (the mechanism PlanSpec pins for the OHLCV
+  *      table); an upsert into a missing table has nothing to read;
+  *   3. rewrite ONLY those tuples via dynamic partition overwrite
   *      (`partitionOverwriteMode=dynamic`), leaving every other
-  *      partition's files physically untouched.
+  *      partition's files physically untouched: one file per tuple for
+  *      the upsert ([[Storage.clusteredWrite]]), ⌈bytes/target⌉ for
+  *      compaction.
   *
   * Neither is expressible as a pure query (they are writers), so like
   * the other sinks (S7–S11) their contract is spec-pinned:
@@ -28,40 +33,30 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   */
 object Maintenance {
 
-  /** Hard ceiling on an upsert batch's distinct-partition fan-out. The
-    * touched tuples are collected, carried as literals in the scan's
-    * partition filter and rewritten by one dynamic-overwrite job; past
-    * a few thousand a batch is a bulk rewrite, which belongs to
-    * [[bootstrapTable]] or [[compactPartitions]], not to a merge. */
+  /** Hard ceiling on an upsert batch's distinct-partition fan-out into
+    * an existing table. The touched tuples are collected, carried as
+    * literals in the scan's partition filter and rewritten by one
+    * dynamic-overwrite job; past a few thousand a batch is a bulk
+    * rewrite, which belongs to a first write or [[compactPartitions]],
+    * not to a merge. */
   val MaxUpsertPartitionFanout = 4096
 
-  /** Partition-pruned upsert: merge `updates` into the parquet table
-    * at `path` partitioned by `partCol`. Key identity is `keyCols`;
-    * when both sides have a key, the row with the greater `version`
-    * wins (updates win ties — the batch is the newer truth).
+  /** Partition-pruned upsert: merge `updates` into the parquet table at
+    * `path` partitioned by `partCols` — e.g. a serving table laid out
+    * `(day, symbol_clean)` so the REST layer's symbol + range filters
+    * prune at the directory level. Key identity is `keyCols`; when both
+    * sides have a key, the row with the greater `version` wins (updates
+    * win ties — the batch is the newer truth).
     *
-    * Write amplification = size of the touched partitions, not the
-    * table: partitions absent from `updates` are never read, never
-    * written, never listed. Returns the distinct partition values
-    * rewritten (driver-side — bounded by the batch's partition
-    * fan-out, which a sane ingest keeps small). */
-  def upsertPartitions(
-      spark: SparkSession,
-      path: String,
-      updates: DataFrame,
-      partCol: String,
-      keyCols: Seq[String],
-      version: String): Seq[Any] =
-    upsertPartitions(spark, path, updates, Seq(partCol), keyCols, version).map(_.head)
-
-  /** [[upsertPartitions]] over a COMPOSITE partition key — e.g. a
-    * serving table laid out `(day, symbol_clean)` so the REST layer's
-    * symbol+range filters prune at the directory level. The touched
-    * set is the batch's distinct partition TUPLES; pruning is one
-    * [[Storage.inPartitions]] set over them (Spark reads only those
-    * directories). The merged rows are written clustered by tuple
-    * ([[Storage.clusteredWrite]]): one file per rewritten tuple.
-    * Returns the rewritten tuples. */
+    * The touched set is the batch's distinct partition TUPLES; only
+    * those directories are read (one [[Storage.inPartitions]] set) and
+    * rewritten, clustered by tuple ([[Storage.clusteredWrite]]): one
+    * file per rewritten tuple. When `path` does not exist yet the merge
+    * has no existing side, so the first write is the batch deduped by
+    * the same rule, with no fan-out cap. `updates` is evaluated once:
+    * unless the caller already persisted it, it is persisted for the
+    * call and released on every exit (Spark's persist-write-unpersist
+    * pattern for `foreachBatch`). Returns the rewritten tuples. */
   def upsertPartitions(
       spark: SparkSession,
       path: String,
@@ -74,64 +69,46 @@ object Maintenance {
     require(
       partCols.forall(updates.columns.contains) && keyCols.forall(updates.columns.contains),
       s"updates must carry partition columns $partCols and keys $keyCols")
-    val touched = updates.select(partCols.map(col): _*).distinct()
-      .collect().map(_.toSeq).toIndexedSeq
-    if (touched.isEmpty) return touched
-    require(touched.size <= MaxUpsertPartitionFanout,
-      s"upsert batch touches ${touched.size} partitions (> $MaxUpsertPartitionFanout); " +
-        "split the batch or coarsen the partition key")
-    val table    = spark.read.parquet(path)
-    val existing = table.filter(Storage.inPartitions(table, partCols, touched))
-    // updates win ties via a side marker ordered AFTER version
-    val merged = Dedup.keepLatest(
-      existing.withColumn("__src", lit(0))
-        .unionByName(updates.withColumn("__src", lit(1))),
-      keyCols.map(col),
-      Seq(col(version), col("__src")))
-      .drop("__src")
-    // per-write dynamic option, NOT a session conf set (a leaked
-    // session-level 'dynamic' would change unrelated static writes)
-    Storage.clusteredWrite(merged, partCols)
-      .mode("overwrite") // dynamic: replaces ONLY partitions present in `merged`
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(path)
-    touched
+    val ownPersist = updates.storageLevel == StorageLevel.NONE
+    if (ownPersist) updates.persist()
+    try {
+      val touched = updates.select(partCols.map(col): _*).distinct()
+        .collect().map(_.toSeq).toIndexedSeq
+      if (touched.isEmpty) return touched
+      val root = new Path(path)
+      val merged =
+        if (!root.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(root))
+          Dedup.keepLatest(updates, keyCols.map(col), Seq(col(version)))
+        else {
+          require(touched.size <= MaxUpsertPartitionFanout,
+            s"upsert batch touches ${touched.size} partitions (> $MaxUpsertPartitionFanout); " +
+              "split the batch or coarsen the partition key")
+          val table    = spark.read.parquet(path)
+          val existing = table.filter(Storage.inPartitions(table, partCols, touched))
+          // updates win ties via a side marker ordered AFTER version
+          Dedup.keepLatest(
+            existing.withColumn("__src", lit(0))
+              .unionByName(updates.withColumn("__src", lit(1))),
+            keyCols.map(col),
+            Seq(col(version), col("__src")))
+            .drop("__src")
+        }
+      // per-write dynamic option, NOT a session conf set (a leaked
+      // session-level 'dynamic' would change unrelated static writes)
+      Storage.clusteredWrite(merged, partCols)
+        .mode("overwrite") // dynamic: replaces ONLY partitions present in `merged`
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(path)
+      touched
+    } finally if (ownPersist) updates.unpersist(blocking = true)
   }
-
-  /** First-write bootstrap for an upsert-maintained table: dedup the
-    * batch by the same greater-version-wins rule and lay down the
-    * partitioned table [[upsertPartitions]] will merge into. */
-  def bootstrapTable(
-      batch: DataFrame,
-      path: String,
-      partCol: String,
-      keyCols: Seq[String],
-      version: String): Unit =
-    bootstrapTable(batch, path, Seq(partCol), keyCols, version)
-
-  /** [[bootstrapTable]] over a composite partition key, one file per
-    * partition tuple ([[Storage.clusteredWrite]]). */
-  def bootstrapTable(
-      batch: DataFrame,
-      path: String,
-      partCols: Seq[String],
-      keyCols: Seq[String],
-      version: String): Unit =
-    Storage.clusteredWrite(Dedup.keepLatest(batch, keyCols.map(col), Seq(col(version))), partCols)
-      .mode("overwrite").parquet(path)
 
   /** Per-partition file census of a Hive-partitioned table — the
     * metadata scan both maintenance ops and a human operator consult.
     * Returns (partition, n_files, total_bytes, min_bytes, max_bytes)
-    * as a DISTRIBUTED relation. */
-  def partitionFileStats(spark: SparkSession, path: String, partCol: String): DataFrame =
-    partitionFileStats(spark, path, Seq(partCol))
-      .withColumn("partition", stripHivePrefix(partCol))
-
-  /** [[partitionFileStats]] over a composite partition key: one level
-    * of `col=value` directories per partition column, leaf stats per
-    * full tuple. `partition` is the relative Hive path
-    * (`day=2024-01-01/sym=A`).
+    * as a DISTRIBUTED relation: one level of `col=value` directories
+    * per partition column, leaf stats per full tuple. `partition` is
+    * the relative Hive path (`day=2024-01-01/sym=A`).
     *
     * Scale shape: the driver lists ONLY the first partition level
     * (its cardinality — days, typically — is the one a layout keeps
@@ -199,36 +176,13 @@ object Maintenance {
     * partitions. Rewrites go partition-by-partition through dynamic
     * overwrite with an explicit `repartition(n)` — n chosen from
     * MEASURED bytes, not a global constant, so a hot partition keeps
-    * parallelism while a cold one collapses to one file. */
-  def compactPartitions(
-      spark: SparkSession,
-      path: String,
-      partCol: String,
-      maxFiles: Int,
-      targetBytes: Long): DataFrame =
-    compactPartitions(spark, path, partCol, maxFiles, targetBytes, maxPartitionsPerRun = 1024)
-
-  def compactPartitions(
-      spark: SparkSession,
-      path: String,
-      partCol: String,
-      maxFiles: Int,
-      targetBytes: Long,
-      maxPartitionsPerRun: Int): DataFrame =
-    compactPartitions(spark, path, Seq(partCol), maxFiles, targetBytes, maxPartitionsPerRun)
-      .withColumn("partition", stripHivePrefix(partCol))
-
-  /** Single-partition-column callers see bare VALUES (`2024-01-01`),
-    * the original contract; the composite forms report the relative
-    * Hive path (`day=2024-01-01/sym=A`). */
-  private def stripHivePrefix(partCol: String): Column =
-    regexp_replace(col("partition"),
-      "^" + java.util.regex.Pattern.quote(partCol) + "=", "")
-
-  /** [[compactPartitions]] over a composite partition key — the shape
-    * the streaming upsert's serving layout `(day, symbol_clean)`
-    * needs: micro-batch ingest leaves one file per batch per touched
-    * TUPLE, and only the fragmented tuples are rewritten. */
+    * parallelism while a cold one collapses to one file. The table is
+    * opened (listed) once per run: each partition is read before its
+    * own rewrite and never after it.
+    *
+    * `partition` is the relative Hive path (`day=2024-01-01/sym=A`):
+    * with the streaming upsert's serving layout `(day, symbol_clean)`
+    * only the fragmented (day, symbol) tuples are rewritten. */
   def compactPartitions(
       spark: SparkSession,
       path: String,
@@ -256,8 +210,8 @@ object Maintenance {
           r.getAs[Long]("n_files"),
           math.max(1L, (bytes + targetBytes - 1) / targetBytes))
       }
+    lazy val table = spark.read.parquet(path) // listed on the first rewrite, once
     todo.foreach { case (partPath, _, nOut) =>
-      val table = spark.read.parquet(path)
       // `day=2024-01-01/sym=A` → the one tuple (2024-01-01, A)
       val (cols, values) = partPath.split("/").toIndexedSeq.map { seg =>
         val Array(c, v) = seg.split("=", 2)

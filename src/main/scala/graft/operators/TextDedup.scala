@@ -1331,12 +1331,14 @@ object TextDedup {
       maxIter: Int = 30,
       checkpoint: Checkpoint = Checkpoint.local): (DataFrame, Int) = {
     val a = col("doc_a"); val b = col("doc_b")
-    // ONE evaluation of `pairs`, ever: the initial checkpoint keeps
-    // the canonicalized relation INCLUDING degenerate self-pairs, so
-    // the selfOnly labeling at the end reads this materialization
-    // instead of re-running the caller's (possibly join-heavy) pair
-    // source a second time (r15 — for the hamming verdict chains the
-    // old selfOnly subtree re-evaluated the whole band self-join).
+    // Under the local and reliable strategies `pairs` is evaluated
+    // ONCE: the initial checkpoint keeps the canonicalized relation
+    // INCLUDING degenerate self-pairs, so the selfOnly labeling at the
+    // end reads this materialization instead of re-running the
+    // caller's (possibly join-heavy) pair source a second time (r15 —
+    // for the hamming verdict chains the old selfOnly subtree
+    // re-evaluated the whole band self-join). [[Checkpoint.none]]
+    // materializes nothing, so there every use re-evaluates `pairs`.
     val canon = checkpoint.initial(
       pairs
         .select(greatest(a, b).as("src"), least(a, b).as("dst"))

@@ -45,9 +45,12 @@ private[graft] final class DirCached(val name: String) {
         // cache batches; the cost still lands in the FIRST consumer's
         // run (apply is called at query-construction time, inside any
         // caller's timed region), it is just attributed by name now.
+        // A build that fails is unpersisted before the error propagates,
+        // so no cached copy outlives it and a retry persists only its own.
         val df = build.persist(DirCached.level)
         val t0 = System.nanoTime()
-        df.count()
+        try df.count()
+        catch { case e: Throwable => df.unpersist(blocking = true); throw e }
         DirCached.recordBuild(name, dir, (System.nanoTime() - t0) / 1e9)
         df
       })

@@ -144,121 +144,66 @@ object OhlcvStream {
       .trigger(Trigger.ProcessingTime("5 minutes"))
       .outputMode(OutputMode.Append)
 
+  // Compaction thresholds of the sinks: a partition past 8 files is
+  // rewritten to one file per 128 MiB.
+  private val CompactMaxFiles    = 8
+  private val CompactTargetBytes = 128L * 1024 * 1024
+
   /** One micro-batch of an APPEND-style ingest (the [[parquetSink]]
     * semantics — one new file per touched partition per batch, the
     * pathological small-file producer) PLUS the scheduled compaction
-    * tick: every `compactEvery` batches the fragmented partitions are
-    * rewritten in place, so a year of 5-minute appends (~10⁵ batches)
-    * keeps serving reads flat with NO manual maintenance pass — the
-    * in-band equivalent of the reference's scheduled ops
-    * (`infra/main-mvp.tf:464-515`). Compaction failures are logged and
-    * skipped (each partition rewrite is crash-safe dynamic overwrite —
-    * S3ContractSpec); the batch's own append is already durable. */
+    * tick ([[compactionTick]]). */
   def appendBatch(
       batch: DataFrame,
       batchId: Long,
       outPath: String,
       partCols: Seq[String],
       compactEvery: Long,
-      compactMaxFiles: Int = 8,
-      compactTargetBytes: Long = 128L * 1024 * 1024): Unit = {
+      compactMaxFiles: Int = CompactMaxFiles,
+      compactTargetBytes: Long = CompactTargetBytes): Unit = {
     batch.write.mode("append").partitionBy(partCols: _*).parquet(outPath)
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
-      try {
-        graft.operators.Maintenance.compactPartitions(
-          spark = batch.sparkSession, path = outPath, partCols = partCols,
-          maxFiles = compactMaxFiles, targetBytes = compactTargetBytes)
-        ()
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(
-            s"[ohlcv] compaction tick FAILED at batch $batchId ($outPath) — " +
-              s"batch unaffected, next tick retries: $e")
-      }
-    }
+    compactionTick(batch.sparkSession, batchId, outPath, partCols,
+      compactEvery, compactMaxFiles, compactTargetBytes)
   }
 
-  /** Streaming UPSERT sink: each micro-batch merges into the
-    * partitioned table via [[graft.operators.Maintenance
-    * .upsertPartitions]] instead of blind-appending — late or
-    * re-fetched candles REPLACE their earlier versions in place, so
+  /** Streaming UPSERT sink: each micro-batch merges into the table at
+    * `outPath`, partitioned by `partCols`, via [[graft.operators
+    * .Maintenance.upsertPartitions]] instead of blind-appending — late
+    * or re-fetched candles REPLACE their earlier versions in place, so
     * the table holds exactly one row per key at every point in time
-    * (the append sink defers that to a read-side dedup contract).
+    * (the append sink defers that to a read-side dedup contract). The
+    * serving layout partitions by `(day, symbol_clean)` so the REST
+    * layer's symbol + date-range filters prune directories on every
+    * request (the same pruning PlanSpec pins for the batch table).
     *
     * The plain parquet streaming sink cannot express this (appends
     * only); `foreachBatch` is the standard Spark bridge from a stream
     * to a batch writer. Write amplification per batch = the batch's
-    * partition fan-out, which a time-partitioned stream keeps at 1-2
-    * current partitions. Exactly-once: the merge is idempotent
-    * (greater-version-wins is a set union), so a replayed batch after
-    * a crash converges to the same table. `partCol` must be a single
-    * stable partition column (e.g. `day`) carried by the stream. */
+    * partition fan-out, and each rewritten tuple is left as one file.
+    * Exactly-once: the merge is idempotent (greater-version-wins is a
+    * set union), so a replayed batch after a crash converges to the
+    * same table. The compaction tick fires once a day (every 288
+    * five-minute batches, [[upsertBatch]]). */
   def upsertSink(
       deduped: DataFrame,
       outPath: String,
       checkpoint: String,
-      partCol: String,
+      partCols: Seq[String],
       keyCols: Seq[String],
       version: String,
       trigger: Trigger = Trigger.ProcessingTime("5 minutes")): DataStreamWriter[Row] =
-    upsertSink(deduped, outPath, checkpoint, Seq(partCol), keyCols, version, trigger)
-
-  /** [[upsertSink]] over a COMPOSITE partition key — the serving-table
-    * layout: partition the streamed table `(day, symbol_clean)` so the
-    * REST layer's symbol + date-range filters prune directories on
-    * every request (the same pruning PlanSpec pins for the batch
-    * table). */
-  def upsertSink(
-      deduped: DataFrame,
-      outPath: String,
-      checkpoint: String,
-      partCols: Seq[String],
-      keyCols: Seq[String],
-      version: String,
-      trigger: Trigger): DataStreamWriter[Row] =
-    upsertSink(deduped, outPath, checkpoint, partCols, keyCols, version, trigger,
-      compactEvery = 288L, compactMaxFiles = 8,
-      compactTargetBytes = 128L * 1024 * 1024)
-
-  /** [[upsertSink]] with SCHEDULED small-file compaction riding the
-    * batch cadence — micro-batch ingest leaves one file per touched
-    * partition per batch, and without a periodic rewrite the serving
-    * reads (`/latest`, `/analytics`) degrade linearly in table age
-    * (ServeScale round-10: 720 files → 1.22 s vs 90 → 0.54 s on the
-    * same rows). The reference schedules this externally
-    * (`infra/main-mvp.tf:464-515` EventBridge crons); ours fires every
-    * `compactEvery` committed batches inside `foreachBatch` — 288
-    * five-minute batches = once a day — so a year of ingest
-    * (~10⁵ batches) keeps flat read latency with NO manual pass.
-    * `compactEvery <= 0` disables. Compaction failures are logged and
-    * skipped, never fail the batch: [[graft.operators.Maintenance
-    * .compactPartitions]] rewrites partition-by-partition through
-    * dynamic overwrite (each rewrite crash-safe under the S3 contract
-    * — S3ContractSpec), and the next due tick retries. */
-  def upsertSink(
-      deduped: DataFrame,
-      outPath: String,
-      checkpoint: String,
-      partCols: Seq[String],
-      keyCols: Seq[String],
-      version: String,
-      trigger: Trigger,
-      compactEvery: Long,
-      compactMaxFiles: Int,
-      compactTargetBytes: Long): DataStreamWriter[Row] =
     deduped
       .writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        upsertBatch(batch, batchId, outPath, partCols, keyCols, version,
-          compactEvery, compactMaxFiles, compactTargetBytes)
+        upsertBatch(batch, batchId, outPath, partCols, keyCols, version, compactEvery = 288L)
       }
 
-  /** One micro-batch of the upsert sink — bootstrap-or-merge plus the
-    * scheduled compaction tick. Public so the year-scale simulation
-    * ([[graft.YearSim]]) can drive the EXACT production batch body
-    * without a live stream. */
+  /** One micro-batch of the upsert sink — the merge (which bootstraps a
+    * missing table) plus the scheduled compaction tick. Public so a caller
+    * without a live stream (perfbench's `rest_live` writer) runs the
+    * EXACT production batch body. */
   def upsertBatch(
       batch: DataFrame,
       batchId: Long,
@@ -266,27 +211,40 @@ object OhlcvStream {
       partCols: Seq[String],
       keyCols: Seq[String],
       version: String,
+      compactEvery: Long): Unit = {
+    graft.operators.Maintenance.upsertPartitions(
+      batch.sparkSession, outPath, batch, partCols, keyCols, version)
+    compactionTick(batch.sparkSession, batchId, outPath, partCols,
+      compactEvery, CompactMaxFiles, CompactTargetBytes)
+  }
+
+  /** The scheduled small-file compaction riding the batch cadence:
+    * every `compactEvery` committed batches (`<= 0` disables) the
+    * fragmented partitions are rewritten in place, so a year of
+    * 5-minute batches (~10⁵) keeps serving reads (`/latest`,
+    * `/analytics`) flat in table age with NO manual pass (ServeScale
+    * round-10: 720 files → 1.22 s vs 90 → 0.54 s on the same rows).
+    * The reference schedules this externally
+    * (`infra/main-mvp.tf:464-515` EventBridge crons). A failed tick is
+    * logged and skipped, never fails the batch: the batch's own write
+    * is already durable, [[graft.operators.Maintenance
+    * .compactPartitions]] rewrites partition-by-partition through
+    * dynamic overwrite (each rewrite crash-safe under the S3 contract —
+    * S3ContractSpec), and the next due tick retries. */
+  private def compactionTick(
+      spark: SparkSession,
+      batchId: Long,
+      outPath: String,
+      partCols: Seq[String],
       compactEvery: Long,
-      compactMaxFiles: Int = 8,
-      compactTargetBytes: Long = 128L * 1024 * 1024): Unit = {
-    val spark = batch.sparkSession
-    val tableExists = new org.apache.hadoop.fs.Path(outPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(outPath))
-    if (!tableExists) {
-      // first batch bootstraps the table (dedup within the batch)
-      graft.operators.Maintenance.bootstrapTable(
-        batch, outPath, partCols, keyCols, version)
-    } else {
-      graft.operators.Maintenance.upsertPartitions(
-        spark, outPath, batch, partCols, keyCols, version)
-    }
+      maxFiles: Int,
+      targetBytes: Long): Unit =
     if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
       try {
         // the rewrites run eagerly inside compactPartitions; the
         // returned report relation is driver-local already
         graft.operators.Maintenance.compactPartitions(
-          spark, outPath, partCols, compactMaxFiles, compactTargetBytes)
+          spark, outPath, partCols, maxFiles, targetBytes)
         ()
       } catch {
         case scala.util.control.NonFatal(e) =>
@@ -295,6 +253,4 @@ object OhlcvStream {
               s"batch unaffected, next tick retries: $e")
       }
     }
-    ()
-  }
 }

@@ -90,8 +90,8 @@ class S3ContractSpec extends SparkSpec {
     val touched = Maintenance.upsertPartitions(
       spark, s"$root/t",
       Seq(("p1", 1L, "a2", 20L)).toDF("day", "id", "payload", "v"),
-      partCol = "day", keyCols = Seq("id"), version = "v")
-    assert(touched === Seq("p1"))
+      partCols = Seq("day"), keyCols = Seq("id"), version = "v")
+    assert(touched === Seq(Seq("p1")))
 
     val got = spark.read.parquet(s"$root/t")
       .select("id", "payload").as[(Long, String)].collect().toMap
@@ -133,9 +133,9 @@ class S3ContractSpec extends SparkSpec {
     // rename = copy+delete and append throws on this FS — a compaction
     // that silently relied on either would fail or bloat here
     val rewritten = Maintenance.compactPartitions(
-      spark, s"$root/t", "day", maxFiles = 2, targetBytes = 128L << 20)
+      spark, s"$root/t", Seq("day"), maxFiles = 2, targetBytes = 128L << 20)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    assert(rewritten.toSeq === Seq(("p1", 4L, 1L)))
+    assert(rewritten.toSeq === Seq(("day=p1", 4L, 1L)))
 
     // logical invariance: same rows, fewer objects
     val after = spark.read.parquet(s"$root/t")

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.hadoop.fs.Path
+import org.apache.spark.metrics.source.HiveCatalogMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -89,8 +90,9 @@ class MaintenanceSpec extends SparkSpec {
       ("2024-01-02", 9L, "new", 20L),
       ("2024-01-04", 10L, "fresh", 20L))
       .toDF("day", "id", "payload", "v")
-    val touched = Maintenance.upsertPartitions(spark, dir, updates, "day", Seq("id"), "v")
-    assert(touched.map(_.toString).sorted === Seq("2024-01-01", "2024-01-02", "2024-01-04"))
+    val touched = Maintenance.upsertPartitions(spark, dir, updates, Seq("day"), Seq("id"), "v")
+    assert(touched.sortBy(_.head.toString) ===
+      Seq(Seq("2024-01-01"), Seq("2024-01-02"), Seq("2024-01-04")))
 
     val got = spark.read.parquet(dir)
       .select("id", "payload", "v").collect()
@@ -112,7 +114,7 @@ class MaintenanceSpec extends SparkSpec {
     Maintenance.upsertPartitions(
       spark, dir,
       Seq(("p1", 1L, "tied", 10L)).toDF("day", "id", "payload", "v"),
-      "day", Seq("id"), "v")
+      Seq("day"), Seq("id"), "v")
     assert(spark.read.parquet(dir).select("payload").as[String].collect().toSeq === Seq("tied"))
   }
 
@@ -141,6 +143,11 @@ class MaintenanceSpec extends SparkSpec {
           (2025, 10, 8, f"S$i%03d", 2000L + i, "new", 20L))
       }.toDF(wideCols: _*),
       Seq("year", "month", "day", "symbol_clean"))
+    // a row counter in the batch's lineage: non-deterministic, so it is
+    // neither folded nor pruned away, and it counts every row each time
+    // the batch is evaluated
+    val evaluated = spark.sparkContext.longAccumulator("upsert batch rows")
+    val countRows = udf { (_: Long) => evaluated.add(1); true }.asNondeterministic()
 
     for ((table, updates, partCols) <- Seq(small, wide)) {
       val dir = java.nio.file.Files.createTempDirectory("upsert_comp").toString + "/t"
@@ -150,9 +157,12 @@ class MaintenanceSpec extends SparkSpec {
       val batchTuples = updates.select(partCols.map(col): _*).distinct().collect()
         .map(r => hivePath(r.toSeq)).toSet
 
-      val (touched, partitionsRead) = onWriterThread(
-        Maintenance.upsertPartitions(spark, dir, updates, partCols, Seq("id"), "v"))
+      evaluated.reset()
+      val (touched, partitionsRead) = onWriterThread(Maintenance.upsertPartitions(
+        spark, dir, updates.filter(countRows(col("id"))), partCols, Seq("id"), "v"))
       assert(touched.map(hivePath).toSet === batchTuples)
+      // the batch was evaluated once, for the touched tuples and the merge
+      assert(evaluated.value === updates.count())
       // the scan read only the touched directories
       assert(partitionsRead === batchTuples.intersect(before.keySet).size.toLong)
 
@@ -174,11 +184,11 @@ class MaintenanceSpec extends SparkSpec {
     val s = spark; import s.implicits._
     import graft.ohlcv.Storage
     val base = java.nio.file.Files.createTempDirectory("one_file").toString
-    // 6 (day, symbol) tuples × 40 candles, each tuple's rows spread
+    // 6 (day, symbol) tuples × 40 candles (keys distinct per day), each tuple's rows spread
     // round-robin over 8 input partitions
     def candles(version: Long) = (for {
       d <- Seq(7, 8); sym <- Seq("A", "B", "C"); t <- 0 until 40
-    } yield (2025, 10, d, sym, t.toLong, version)).toDF(
+    } yield (2025, 10, d, sym, d * 86400L + t, version)).toDF(
       "year", "month", "day", "symbol_clean", "timestamp_unix", "fetch_timestamp").repartition(8)
     def filesPerTuple(dir: String): Map[String, Long] =
       Maintenance.partitionFileStats(spark, dir, Storage.PartCols)
@@ -189,14 +199,20 @@ class MaintenanceSpec extends SparkSpec {
     spark.conf.set(coalesce, "false")
     try {
       Storage.writeParquet(candles(1L), s"$base/etl", "overwrite")
-      Maintenance.bootstrapTable(candles(1L), s"$base/up", Storage.PartCols, keys, "fetch_timestamp")
+      // an upsert into a missing path is the first write: the batch,
+      // one row per key with the greater version, one file per tuple
+      Maintenance.upsertPartitions(spark, s"$base/up", candles(0L).unionByName(candles(1L)),
+        Storage.PartCols, keys, "fetch_timestamp")
       assert(filesPerTuple(s"$base/etl").size === 6)
       assert(filesPerTuple(s"$base/etl").values.toSet === Set(1L))
       assert(filesPerTuple(s"$base/up").values.toSet === Set(1L))
+      assert(spark.read.parquet(s"$base/up").count() === 240L)
+      assert(spark.read.parquet(s"$base/up").filter(col("fetch_timestamp") === 1L).count() === 240L)
       Maintenance.upsertPartitions(spark, s"$base/up", candles(2L).filter(col("day") === 8),
         Storage.PartCols, keys, "fetch_timestamp")
       assert(filesPerTuple(s"$base/up").size === 6)
       assert(filesPerTuple(s"$base/up").values.toSet === Set(1L))
+      assert(spark.read.parquet(s"$base/up").count() === 240L)
       assert(spark.read.parquet(s"$base/up").filter(col("fetch_timestamp") === 2L).count() === 120L)
     } finally spark.conf.unset(coalesce)
   }
@@ -211,18 +227,18 @@ class MaintenanceSpec extends SparkSpec {
       .coalesce(1).write.mode("append").partitionBy("part").parquet(dir)
 
     val coldBefore = fileList(dir, "part=cold")
-    val statsBefore = Maintenance.partitionFileStats(spark, dir, "part")
+    val statsBefore = Maintenance.partitionFileStats(spark, dir, Seq("part"))
       .collect().map(r => r.getString(0) -> r.getAs[Long]("n_files")).toMap
-    assert(statsBefore("hot") === 8L && statsBefore("cold") === 1L)
+    assert(statsBefore("part=hot") === 8L && statsBefore("part=cold") === 1L)
 
     val done = Maintenance.compactPartitions(
-      spark, dir, "part", maxFiles = 4, targetBytes = 1L << 30)
+      spark, dir, Seq("part"), maxFiles = 4, targetBytes = 1L << 30)
       .collect().map(r => (r.getString(0), r.getAs[Long]("files_target"))).toMap
-    assert(done === Map("hot" -> 1L)) // only the fragmented partition, to 1 file
+    assert(done === Map("part=hot" -> 1L)) // only the fragmented partition, to 1 file
 
-    val statsAfter = Maintenance.partitionFileStats(spark, dir, "part")
+    val statsAfter = Maintenance.partitionFileStats(spark, dir, Seq("part"))
       .collect().map(r => r.getString(0) -> r.getAs[Long]("n_files")).toMap
-    assert(statsAfter("hot") === 1L)
+    assert(statsAfter("part=hot") === 1L)
     assert(fileList(dir, "part=cold") === coldBefore) // cold partition untouched
     // contents identical after rewrite
     val ids = spark.read.parquet(dir).filter(col("part") === "hot")
@@ -277,21 +293,25 @@ class MaintenanceSpec extends SparkSpec {
 
     // the census is a DataFrame (never a forced driver collection) and
     // covers every leaf
-    val census = Maintenance.partitionFileStats(spark, dir, "part")
+    val census = Maintenance.partitionFileStats(spark, dir, Seq("part"))
     assert(census.count() === n.toLong)
     assert(census.filter(col("n_files") > 1).count() === 6L)
 
     // cap 3 < 6 offenders: the planner materializes/rewrites only the
     // worst 3 (all tie at 2 files -> partition-asc tiebreak); the rest
     // wait for the next run
+    // the run opens the table once: its listing discovers the table's
+    // n + 6 files one time, not once per rewritten partition
+    HiveCatalogMetrics.reset()
     val done = Maintenance.compactPartitions(
-      spark, dir, "part", maxFiles = 1, targetBytes = 1L << 30, maxPartitionsPerRun = 3)
+      spark, dir, Seq("part"), maxFiles = 1, targetBytes = 1L << 30, maxPartitionsPerRun = 3)
       .collect().map(_.getString(0)).sorted.toSeq
-    assert(done === Seq("p0000", "p0001", "p0002"))
-    val after = Maintenance.partitionFileStats(spark, dir, "part")
+    assert(HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount === n + 6L)
+    assert(done === Seq("part=p0000", "part=p0001", "part=p0002"))
+    val after = Maintenance.partitionFileStats(spark, dir, Seq("part"))
       .filter(col("n_files") > 1)
       .collect().map(_.getString(0)).sorted.toSeq
-    assert(after === Seq("p0003", "p0004", "p0005")) // backlog intact for run 2
+    assert(after === Seq("part=p0003", "part=p0004", "part=p0005")) // backlog intact for run 2
   }
 
   test("upsertPartitions: partition fan-out beyond the pruning-predicate budget is rejected loudly") {
@@ -302,7 +322,7 @@ class MaintenanceSpec extends SparkSpec {
     val wide = (0 until Maintenance.MaxUpsertPartitionFanout + 1)
       .map(i => (f"d$i%05d", i.toLong, "y", 2L)).toDF("day", "id", "payload", "v")
     val e = intercept[IllegalArgumentException](
-      Maintenance.upsertPartitions(spark, dir, wide, "day", Seq("id"), "v"))
+      Maintenance.upsertPartitions(spark, dir, wide, Seq("day"), Seq("id"), "v"))
     assert(e.getMessage.contains("split the batch"))
   }
 }

@@ -37,4 +37,22 @@ class DirCachedSpec extends graft.SparkSpec {
     assert((builds1, builds2) === ((3, 2)))
     DirCached.releaseAll(spark); ()
   }
+
+  test("a build that fails leaves no persisted copy behind; a retry with a good build is served and logged") {
+    import org.apache.spark.sql.classic
+    import org.apache.spark.sql.functions.{col, udf}
+    val c = new DirCached("spec_failing")
+    val boom = udf { (_: Long) => throw new IllegalStateException("build failed"); true }
+    val bad  = spark.range(3).toDF("x").filter(boom(col("x")))
+    intercept[Exception](c(spark, "/f")(bad))
+    // the failed frame is no longer registered with the cache manager
+    val cacheManager = spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager
+    assert(cacheManager.lookupCachedData(bad.asInstanceOf[classic.Dataset[_]]).isEmpty)
+
+    val good = c(spark, "/f")(spark.range(4).toDF("x"))
+    assert(good.count() === 4)
+    assert(cacheManager.lookupCachedData(good.asInstanceOf[classic.Dataset[_]]).nonEmpty)
+    assert(DirCached.buildSeconds.exists(_._1 == "spec_failing"))
+    DirCached.releaseAll(spark); ()
+  }
 }

@@ -23,7 +23,7 @@ class UpsertSinkSpec extends SparkSpec {
     def runOnce(): Unit = {
       val src = spark.readStream.schema(schema).parquet(s"$land/*")
       val q = OhlcvStream.upsertSink(
-        src, out, ckpt, partCol = "day", keyCols = Seq("id"), version = "v",
+        src, out, ckpt, partCols = Seq("day"), keyCols = Seq("id"), version = "v",
         trigger = Trigger.AvailableNow()).start()
       q.awaitTermination(120000)
       assert(!q.isActive)
@@ -55,7 +55,7 @@ class UpsertSinkSpec extends SparkSpec {
       .toDF("day", "id", "payload", "v").coalesce(1).write.parquet(s"$tmp/land/f1")
     val src = spark.readStream.schema(schema).parquet(s"$tmp/land/*")
     val q = OhlcvStream.upsertSink(
-      src, s"$tmp/table", s"$tmp/ckpt", "day", Seq("id"), "v",
+      src, s"$tmp/table", s"$tmp/ckpt", Seq("day"), Seq("id"), "v",
       trigger = Trigger.AvailableNow()).start()
     q.awaitTermination(120000)
     val rows = spark.read.parquet(s"$tmp/table").collect()
