@@ -68,9 +68,7 @@ object ServeScale {
       // pruned to one day-partition per symbol — scan rows must stay
       // ∝ symbols × 288, independent of how many days the table holds
       def serveLatest(): DataFrame =
-        Api.latestSummaryFromTable(
-          Storage.readParquet(spark, s"$dir/table"),
-          spark.sparkContext.hadoopConfiguration, s"$dir/table", syms)
+        Api.latestSummaryFromTable(Storage.readParquet(spark, s"$dir/table"), syms)
 
       // the /historical chain for one symbol+day (handleHistorical's
       // per-symbol source.ohlcv with both bounds): same pruned scan as
@@ -113,23 +111,6 @@ object ServeScale {
       measure("/historical", () => serveHistorical())
       measure("/analytics/daily_summary", () => serveDailySummary())
       measure("/analytics/top_movers", () => serveTopMovers())
-
-      // the maintenance pass over the served table: the ETL above
-      // writes through Storage.clusteredWrite, one file per (day,
-      // symbol) tuple, so this worst-first pass finds nothing to
-      // rewrite (compacted_partitions 0) and the *_compacted rows
-      // repeat the ones above. An append writer (parquetSink,
-      // OhlcvStream.appendBatch) leaves one file per batch per tuple;
-      // there the same pass rewrites each fragmented tuple to one file
-      val compacted = graft.operators.Maintenance.compactPartitions(
-        spark, s"$dir/table", Seq("year", "month", "day", "symbol_clean"),
-        maxFiles = 1, targetBytes = 128L << 20, maxPartitionsPerRun = 1024)
-        .count()
-      println(s"""{"scale":"$label","compacted_partitions":$compacted}""")
-      measure("/latest_compacted", () => serveLatest())
-      // on a compacted table the analytics scan opens symbols × the
-      // ±1-day superset (one object per partition)
-      measure("/analytics/daily_summary_compacted", () => serveDailySummary())
 
       // the COMPOSED /dashboard endpoint over real HTTP — it fans into
       // the /files listing (newest-5 heap over the raw landing dir, so

@@ -104,9 +104,7 @@ object YearSim {
         require(warmup.length == out, "warm/cold row drift")
       }
       measure("/latest", () =>
-        Api.latestSummaryFromTable(
-          Storage.readParquet(spark, dir),
-          spark.sparkContext.hadoopConfiguration, dir, syms))
+        Api.latestSummaryFromTable(Storage.readParquet(spark, dir), syms))
       measure("/analytics/daily_summary", () =>
         Api.dailySummaryFromTable(Storage.readParquet(spark, dir), lastDate))
     }

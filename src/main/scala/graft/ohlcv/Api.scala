@@ -5,10 +5,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
 /** Thin query façade mirroring the reference REST API
-  * (api/api_handler.py) as pure functions over the canonical candle
+  * (api/api_handler.py). The cores ([[getOhlcv]], [[latestSummary]],
+  * [[latest]], [[symbols]], [[toCsvRows]]) take the canonical candle
   * frame (symbol, ts, open, high, low, close, volume,
-  * fetch_timestamp). No HTTP — endpoints are library calls whose
-  * `collect()` happens at the caller's boundary.
+  * fetch_timestamp); the `…FromTable` functions, one per REST route,
+  * take the opened PARTITIONED normalized table and prune its scan.
+  * No HTTP — endpoints are library calls whose `collect()` happens at
+  * the caller's boundary.
   */
 object Api {
 
@@ -134,12 +137,16 @@ object Api {
       symbol: String,
       fromDate: Option[String],
       toDate: Option[String],
-      interval: String): DataFrame = {
-    val base = getOhlcv(candles, symbol, fromDate, toDate, limit = None)
+      interval: String): DataFrame =
+    resample(getOhlcv(candles, symbol, fromDate, toDate, limit = None), interval)
+
+  /** Interval aggregation (A6) at `interval` (token form) of candles
+    * already ranged and deduped by [[getOhlcv]] or
+    * [[getOhlcvFromTable]], bucket-ascending. */
+  def resample(candles: DataFrame, interval: String): DataFrame =
     Resample
-      .candles(base, intervalToMinutes(interval) * 60, col("fetch_timestamp"))
+      .candles(candles, intervalToMinutes(interval) * 60, col("fetch_timestamp"))
       .orderBy(col("bucket_start"))
-  }
 
   /** GET /latest (api/api_handler.py:479-514): latest candle per
     * symbol (O6/T5). */
@@ -171,10 +178,9 @@ object Api {
     * listing `normalized` was opened with ([[Storage
     * .newestDatePerSymbol]], metadata-only — no data file opened, and
     * the same snapshot the scan reads, so an upsert committing
-    * mid-request cannot name a day the scan lacks; `conf` and
-    * `tableDir` are not consulted), and the scan is pruned to
-    * exactly those (year, month, day, symbol_clean) directories by one
-    * [[Storage.inPartitions]] set. Scan rows stay
+    * mid-request cannot name a day the scan lacks), and the scan is
+    * pruned to exactly those (year, month, day, symbol_clean)
+    * directories by one [[Storage.inPartitions]] set. Scan rows stay
     * ∝ symbols × one day's candles no matter how many years the table
     * holds (ServeScale: constant rows at ×100; PlanSpec-pinned).
     *
@@ -184,11 +190,7 @@ object Api {
     * is scoped to what was read — here, the newest landed day per
     * symbol. Symbols absent from the table contribute no row, exactly
     * like symbols absent from the reference's recent files. */
-  def latestSummaryFromTable(
-      normalized: DataFrame,
-      conf: org.apache.hadoop.conf.Configuration,
-      tableDir: String,
-      symbols: Seq[String]): DataFrame = {
+  def latestSummaryFromTable(normalized: DataFrame, symbols: Seq[String]): DataFrame = {
     // ONE pass over the open's listing answers every symbol's newest day
     // (per-symbol availableDates globs would cost symbols × layout
     // listings). Symbols absent from the map — including empty or
@@ -208,6 +210,16 @@ object Api {
         col("symbol").isin(found.map(_._1): _*))))
   }
 
+  /** [[latestSummaryFromTable]] in its four-argument form; `conf` and
+    * `tableDir` are not consulted (the newest days come from the
+    * listing `normalized` was opened with). */
+  def latestSummaryFromTable(
+      normalized: DataFrame,
+      conf: org.apache.hadoop.conf.Configuration,
+      tableDir: String,
+      symbols: Seq[String]): DataFrame =
+    latestSummaryFromTable(normalized, symbols)
+
   /** A2 daily_summary off the PARTITIONED table — the reference's
     * analytics invoke surface (analytics/lambda_analytics.py:174-272)
     * reads EXACTLY the requested date's objects (one S3 prefix list +
@@ -226,34 +238,19 @@ object Api {
       .orderBy(desc("price_change_pct"), col("symbol"))
   }
 
-  /** A2 daily_summary off the canonical candle FRAME (the non-table
-    * source the REST layer also serves): dedup keep-latest-fetch (the
-    * /ohlcv D2 contract — the reference's CSVs are post-ETL, already
-    * deduped), then the A2 rollup for one date, desc by pct change. */
-  def dailySummaryFrame(candles: DataFrame, date: String): DataFrame =
-    Analytics.dailySummary(
-      Dedup.keepLatest(candles,
-        keys = Seq(col("symbol"), col("ts")), version = Seq(col("fetch_timestamp"))),
-      date, col("fetch_timestamp"))
-
-  /** A3 date_range off the canonical frame (dedup first, then per-day
-    * rollups for one symbol over an inclusive range, date-ascending). */
-  def dateRangeFrame(candles: DataFrame, symbol: String, from: String, to: String): DataFrame =
-    Analytics.dateRange(
-      Dedup.keepLatest(candles,
-        keys = Seq(col("symbol"), col("ts")), version = Seq(col("fetch_timestamp"))),
-      symbol, from, to, col("fetch_timestamp"))
-
   /** A3 date_range off the PARTITIONED table: the
-    * [[getOhlcvFromTable]] symbol and date-range prunes applied to the
-    * analytics rollup, so scan rows stay ∝ one symbol × the range's
-    * days. */
+    * [[getOhlcvFromTable]] symbol and date-range prunes, dedup
+    * keep-latest-fetch, then per-day rollups for one symbol over the
+    * inclusive range, date-ascending — scan rows stay ∝ one symbol ×
+    * the range's days. */
   def dateRangeFromTable(
       normalized: DataFrame, symbol: String, from: String, to: String): DataFrame =
-    dateRangeFrame(
-      fromNormalized(normalized.filter(
-        ofSymbol(symbol) && Storage.inDateRange(normalized, Some(from), Some(to)))),
-      symbol, from, to)
+    Analytics.dateRange(
+      Dedup.keepLatest(
+        fromNormalized(normalized.filter(
+          ofSymbol(symbol) && Storage.inDateRange(normalized, Some(from), Some(to)))),
+        keys = Seq(col("symbol"), col("ts")), version = Seq(col("fetch_timestamp"))),
+      symbol, from, to, col("fetch_timestamp"))
 
   /** A4 top_movers off the PARTITIONED table
     * (analytics/lambda_analytics.py:360-430 — the reference composes
@@ -271,16 +268,13 @@ object Api {
   /** Default /latest symbol list for a table-backed server: distinct
     * symbols scanned from the table's NEWEST landed day only — the
     * date comes from the listing `normalized` was opened with
-    * ([[Storage.newestDatePerSymbol]], metadata-only; `conf` and
-    * `tableDir` are not consulted) and the scan prunes to that one day,
-    * so cost is one day × symbols regardless of table history. The reference
-    * derives its default list from recent files the same way
-    * (api/api_handler.py:451-477); the frame-side `Api.symbols`
-    * distinct would scan the WHOLE table just to enumerate names. */
-  def symbolsFromTable(
-      normalized: DataFrame,
-      conf: org.apache.hadoop.conf.Configuration,
-      tableDir: String): DataFrame = {
+    * ([[Storage.newestDatePerSymbol]], metadata-only) and the scan
+    * prunes to that one day, so cost is one day × symbols regardless of
+    * table history. The reference derives its default list from recent
+    * files the same way (api/api_handler.py:451-477); the frame-side
+    * `Api.symbols` distinct would scan the WHOLE table just to
+    * enumerate names. */
+  def symbolsFromTable(normalized: DataFrame): DataFrame = {
     val newest = Storage.newestDatePerSymbol(normalized)
     if (newest.isEmpty)
       normalized.select(col("symbol")).filter(lit(false)).distinct()

@@ -248,11 +248,16 @@ object Storage {
       .collect(leafDate)
       .groupMapReduce(_._1)(_._2)(Ordering[String].max)
 
-  private val Leaf = ".*/year=(\\d+)/month=(\\d+)/day=(\\d+)/symbol_clean=([^/]+)$".r
-
-  /** (symbol_clean, yyyy-MM-dd) of a `…/year=Y/month=M/day=D/symbol_clean=S` leaf path. */
-  private val leafDate: PartialFunction[String, (String, String)] = {
-    case Leaf(y, m, d, sym) => sym -> f"${y.toInt}%04d-${m.toInt}%02d-${d.toInt}%02d"
+  /** (symbol_clean, yyyy-MM-dd) of a leaf path whose last four segments
+    * are `year=Y`, `month=M`, `day=D` and `symbol_clean=S` in any order:
+    * the day-major parquet layout and the symbol-major CSV one
+    * ([[writeCsv]]) both parse. */
+  private val leafDate: PartialFunction[String, (String, String)] = Function.unlift { leaf =>
+    val kv = leaf.split('/').takeRight(4).map(_.split("=", 2))
+      .collect { case Array(k, v) => k -> v }.toMap
+    def num(k: String): Option[Int] = kv.get(k).flatMap(_.toIntOption)
+    for (y <- num("year"); m <- num("month"); d <- num("day"); sym <- kv.get("symbol_clean"))
+      yield sym -> f"$y%04d-$m%02d-$d%02d"
   }
 
   /** The (symbol_clean, yyyy-MM-dd) leaves of the day-major layout

@@ -2,7 +2,7 @@ package graft.serving
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-import graft.ohlcv.Api
+import graft.ohlcv.{Api, Storage}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Row}
 
@@ -35,9 +35,14 @@ import org.apache.spark.sql.{DataFrame, Row}
   * materializes responses, never the table. The serving JVM is a thin
   * Spark driver; the cluster does the scan/dedup/resample work.
   *
-  * The candle frame is a PROVIDER (`() => DataFrame`) so the backing
-  * view can pick up newly-landed files per request (a parquet path
-  * re-read, or a streaming sink's output table).
+  * The server holds an OPENER of the normalized table
+  * (`() => DataFrame`, Hive-partitioned by year/month/day/symbol_clean),
+  * never an open frame: each request that reads data calls it once,
+  * in `route`, and answers every part from that one listing, so newly
+  * landed files appear on the next request and no two parts of one
+  * answer come from different listings. Every route reads only the
+  * directories its answer lives in (the `…FromTable` functions of
+  * [[graft.ohlcv.Api]], PlanSpec-pinned).
   */
 object ApiServer {
 
@@ -77,91 +82,15 @@ object ApiServer {
 
   private val mapper = new ObjectMapper()
 
-  /** What the handlers query. `frame()` is the canonical candle frame;
-    * `ohlcv()` is the symbol+range+dedup+tail pipeline, overridable so
-    * a table-backed source can push the filters into the scan. */
-  private[serving] sealed trait Source {
-    def frame(): DataFrame
-    def ohlcv(symbol: String, from: Option[String], to: Option[String],
-        limit: Option[Int]): DataFrame
-    /** /latest aggregate for the requested symbols. */
-    def latestSummary(symbols: Seq[String]): DataFrame
-    /** Default /latest symbol list (no ?symbols= given). */
-    def defaultSymbols(cap: Int): Seq[String]
-    /** /analytics daily_summary rollup for one date (A2). */
-    def dailySummary(date: String): DataFrame
-    /** /analytics date_range per-day rollups for one symbol (A3). */
-    def dateRange(symbol: String, from: String, to: String): DataFrame
-  }
-  private final class FrameSource(provider: () => DataFrame) extends Source {
-    def frame(): DataFrame = provider()
-    def ohlcv(symbol: String, from: Option[String], to: Option[String],
-        limit: Option[Int]): DataFrame =
-      Api.getOhlcv(frame(), symbol, from, to, limit)
-    def latestSummary(symbols: Seq[String]): DataFrame =
-      Api.latestSummary(frame().filter(col("symbol").isin(symbols: _*)))
-    def defaultSymbols(cap: Int): Seq[String] =
-      Api.symbols(frame()).limit(cap).collect().map(_.getString(0)).toSeq
-    def dailySummary(date: String): DataFrame =
-      Api.dailySummaryFrame(frame(), date)
-    def dateRange(symbol: String, from: String, to: String): DataFrame =
-      Api.dateRangeFrame(frame(), symbol, from, to)
-  }
-  /** Serves the PARTITIONED normalized parquet table directly: every
-    * route reads only the directories its answer lives in, addressed
-    * through [[graft.ohlcv.Storage]] — the symbol's `symbol_clean`
-    * directories, the requested days (plus pushed `timestamp_unix`
-    * bounds), or for /latest one set of (day, symbol) tuples — the plan
-    * a 100 TB table needs (PlanSpec-pinned). The path is re-read per
-    * request, so newly landed files appear without a restart. */
-  private final class TableSource(
-      spark: org.apache.spark.sql.SparkSession, path: String) extends Source {
-    private def table = spark.read.parquet(path)
-    def frame(): DataFrame = Api.fromNormalized(table)
-    def ohlcv(symbol: String, from: Option[String], to: Option[String],
-        limit: Option[Int]): DataFrame =
-      Api.getOhlcvFromTable(table, symbol, from, to, limit)
-    // /latest never scans a symbol's history: newest-day discovery is
-    // metadata-only, the scan prunes to one day-partition per symbol
-    // (reference semantics — its /latest reads recent files only)
-    def latestSummary(symbols: Seq[String]): DataFrame =
-      Api.latestSummaryFromTable(
-        table, spark.sparkContext.hadoopConfiguration, path, symbols)
-    // bare /latest must not scan the table's history just to list
-    // names: symbols come from the newest landed day only (date from
-    // the partition layout, scan pruned to that day)
-    def defaultSymbols(cap: Int): Seq[String] =
-      Api.symbolsFromTable(table, spark.sparkContext.hadoopConfiguration, path)
-        .limit(cap).collect().map(_.getString(0)).toSeq
-    // the analytics rollups prune to the requested day/range at the
-    // partition level (ServeScale-measured: scan rows ∝ symbols × day)
-    def dailySummary(date: String): DataFrame =
-      Api.dailySummaryFromTable(table, date)
-    def dateRange(symbol: String, from: String, to: String): DataFrame =
-      Api.dateRangeFromTable(table, symbol, from, to)
-  }
-
-  /** Start serving `candles` (canonical frame: symbol, ts, open, high,
-    * low, close, volume, fetch_timestamp). Binds 127.0.0.1. */
-  def start(candles: () => DataFrame, cfg: Config = Config()): Server =
-    startWith(new FrameSource(candles), cfg)
-
-  /** Start serving a partitioned normalized parquet table with
-    * predicate pushdown on the /ohlcv family ([[TableSource]]). */
-  def startFromTable(
-      spark: org.apache.spark.sql.SparkSession,
-      tablePath: String,
-      cfg: Config = Config()): Server =
-    startWith(
-      new TableSource(spark, tablePath),
-      cfg.copy(hadoopConf = cfg.hadoopConf.orElse(
-        Some(() => spark.sparkContext.hadoopConfiguration))))
-
-  private def startWith(source: Source, cfg: Config): Server = {
+  /** Start serving the normalized table `open` returns — any Hive
+    * layout with the year/month/day/symbol_clean partition columns, e.g.
+    * `() => Storage.readCsv(spark, dir)` for the reference's CSV twin
+    * (api/api_handler_csv.py). Binds 127.0.0.1. */
+  def start(open: () => DataFrame, cfg: Config = Config()): Server = {
     val http = com.sun.net.httpserver.HttpServer.create(
       new java.net.InetSocketAddress("127.0.0.1", cfg.port), 0)
     http.createContext("/", (ex: com.sun.net.httpserver.HttpExchange) => {
-      try route(ex, source, cfg)
+      try route(ex, open, cfg)
       catch {
         case scala.util.control.NonFatal(e) => // :62-66
           val err = mapper.createObjectNode()
@@ -176,26 +105,39 @@ object ApiServer {
     new Server(http, pool)
   }
 
+  /** Start serving the partitioned normalized parquet table at
+    * `tablePath`, re-listed per request. */
+  def startFromTable(
+      spark: org.apache.spark.sql.SparkSession,
+      tablePath: String,
+      cfg: Config = Config()): Server =
+    start(
+      () => Storage.readParquet(spark, tablePath),
+      cfg.copy(hadoopConf = cfg.hadoopConf.orElse(
+        Some(() => spark.sparkContext.hadoopConfiguration))))
+
   // ---------------------------------------------------------------
   // Routing
   // ---------------------------------------------------------------
 
   private def route(
       ex: com.sun.net.httpserver.HttpExchange,
-      source: Source,
+      open: () => DataFrame,
       cfg: Config): Unit = {
     val path = ex.getRequestURI.getPath
     val qp   = queryParams(ex)
+    // the request's one open, taken only by the routes that read data
+    lazy val table = open()
     if (ex.getRequestMethod == "OPTIONS") { respondRaw(ex, 200, "", "application/json"); return }
-    if (path.startsWith("/symbols")) handleSymbols(ex, source.frame(), qp, cfg)
-    else if (path.startsWith("/ohlcv/")) handleOhlcv(ex, source, path.stripPrefix("/ohlcv/"), qp, cfg)
-    else if (path.startsWith("/latest")) handleLatest(ex, source, qp, cfg)
-    else if (path.startsWith("/historical")) handleHistorical(ex, source, qp, cfg)
-    else if (path.startsWith("/alfaquantz/price/get")) handleAlfaPrice(ex, source, path, qp, cfg)
-    else if (path.startsWith("/analytics")) handleAnalytics(ex, source, qp)
+    if (path.startsWith("/symbols")) handleSymbols(ex, table, qp, cfg)
+    else if (path.startsWith("/ohlcv/")) handleOhlcv(ex, table, path.stripPrefix("/ohlcv/"), qp, cfg)
+    else if (path.startsWith("/latest")) handleLatest(ex, table, qp, cfg)
+    else if (path.startsWith("/historical")) handleHistorical(ex, table, qp, cfg)
+    else if (path.startsWith("/alfaquantz/price/get")) handleAlfaPrice(ex, table, path, qp, cfg)
+    else if (path.startsWith("/analytics")) handleAnalytics(ex, table, qp)
     else if (path == "/files" || path == "/files/") handleFiles(ex, qp, cfg)
     else if (path.startsWith("/file/")) handleFileDetail(ex, path.stripPrefix("/file/"), cfg)
-    else if (path == "/dashboard" || path == "/dashboard/") handleDashboard(ex, source, cfg)
+    else if (path == "/dashboard" || path == "/dashboard/") handleDashboard(ex, table, cfg)
     else { // :51-58
       val err = mapper.createObjectNode()
       err.put("error", "Endpoint not found")
@@ -215,7 +157,7 @@ object ApiServer {
   /** GET /symbols — distinct sorted symbols, optional limit (:67-103). */
   private def handleSymbols(
       ex: com.sun.net.httpserver.HttpExchange,
-      candles: DataFrame, qp: Map[String, String], cfg: Config): Unit = {
+      table: DataFrame, qp: Map[String, String], cfg: Config): Unit = {
     val limit = qp.get("limit").map(l => (l, l.toIntOption))
     limit match {
       case Some((_, None)) => // :88-91
@@ -224,7 +166,7 @@ object ApiServer {
         err.put("message", "Limit must be a valid integer")
         respond(ex, 400, err)
       case _ =>
-        val base = Api.symbols(candles)
+        val base = Api.symbols(table)
         val lim  = limit.flatMap(_._2)
         val syms = lim.fold(base)(base.limit).collect().map(_.getString(0))
         val out = mapper.createObjectNode()
@@ -245,18 +187,19 @@ object ApiServer {
     * honored in BOTH branches). */
   private def handleOhlcv(
       ex: com.sun.net.httpserver.HttpExchange,
-      source: Source, rawSymbol: String, qp: Map[String, String], cfg: Config): Unit = {
+      table: DataFrame, rawSymbol: String, qp: Map[String, String], cfg: Config): Unit = {
     val symbol   = normalizeSymbol(java.net.URLDecoder.decode(rawSymbol, "UTF-8"))
     val interval = qp.getOrElse("interval", "5")
     val limit    = qp.get("limit").flatMap(_.toIntOption)
     val rows =
       if (Api.intervalToMinutes(interval) == 5)
-        source.ohlcv(symbol, qp.get("from"), qp.get("to"), limit)
+        Api.getOhlcvFromTable(table, symbol, qp.get("from"), qp.get("to"), limit)
           .select(unix_timestamp(col("ts")), col("open"), col("high"),
             col("low"), col("close"), col("volume").cast("double"))
           .collect()
       else {
-        val agg = resampled(source.ohlcv(symbol, qp.get("from"), qp.get("to"), None), interval)
+        val agg = Api.resample(
+          Api.getOhlcvFromTable(table, symbol, qp.get("from"), qp.get("to"), None), interval)
         // tail-limit AFTER resampling: most-recent N buckets, ascending
         limit.fold(agg)(n => agg.orderBy(desc("bucket_start")).limit(n))
           .orderBy(col("bucket_start"))
@@ -285,16 +228,16 @@ object ApiServer {
     * `latestSymbolCap` available, :162-194). */
   private def handleLatest(
       ex: com.sun.net.httpserver.HttpExchange,
-      source: Source, qp: Map[String, String], cfg: Config): Unit = {
+      table: DataFrame, qp: Map[String, String], cfg: Config): Unit = {
     val symbols = qp.get("symbols") match {
       case Some(s) => s.split(",").map(x => normalizeSymbol(x.trim)).toSeq
-      case None    => source.defaultSymbols(cfg.latestSymbolCap)
+      case None    => defaultSymbols(table, cfg.latestSymbolCap)
     }
     // reference per-symbol shape (:501-508): {symbol, latest_price,
     // total_candles, resolution, timestamp, last_candle} — ONE
-    // aggregate supplies every field; the table-backed source prunes
-    // the scan to each symbol's newest day partition.
-    val rows = source.latestSummary(symbols)
+    // aggregate supplies every field, its scan pruned to each symbol's
+    // newest day partition.
+    val rows = Api.latestSummaryFromTable(table, symbols)
       .select(col("symbol"), col("total_candles"), col("fetch_ts"),
         col("last.t"), col("last.open"), col("last.high"),
         col("last.low"), col("last.close"), col("last.v"))
@@ -328,16 +271,16 @@ object ApiServer {
     * (:196-249; CSV lines via [[Api.toCsvRows]], :614-631). */
   private def handleHistorical(
       ex: com.sun.net.httpserver.HttpExchange,
-      source: Source, qp: Map[String, String], cfg: Config): Unit = {
+      table: DataFrame, qp: Map[String, String], cfg: Config): Unit = {
     val symbols = (qp.get("symbol"), qp.get("symbols")) match {
       case (Some(s), _)    => Seq(normalizeSymbol(s))
       case (None, Some(m)) => m.split(",").map(x => normalizeSymbol(x.trim)).toSeq
       case _ =>
-        Api.symbols(source.frame()).limit(cfg.historicalSymbolCap)
+        Api.symbols(table).limit(cfg.historicalSymbolCap)
           .collect().map(_.getString(0)).toSeq
     }
     val perSymbol = symbols.map { s =>
-      s -> source.ohlcv(s, qp.get("from"), qp.get("to"), limit = None)
+      s -> Api.getOhlcvFromTable(table, s, qp.get("from"), qp.get("to"), limit = None)
     }
     if (qp.get("format").map(_.toLowerCase).contains("csv")) {
       val header = "symbol,timestamp,datetime,open,high,low,close,volume"
@@ -375,13 +318,13 @@ object ApiServer {
     * query_type names, same response envelopes, same error shapes
     * (400 missing params / unknown type, 404 no data, the 31-day
     * range cap on date_range). Every rollup runs the partition-pruned
-    * A1/A2/A3/A4 pipelines — against a table source the scan reads
-    * the requested day(s) only, never the table
+    * A1/A2/A3/A4 pipelines — the scan reads the requested day(s)
+    * only, never the table
     * (ServeScale-measured, PlanSpec-pinned). `symbol` accepts both
     * the reference's clean form (RELIANCE) and the exchange form. */
   private def handleAnalytics(
       ex: com.sun.net.httpserver.HttpExchange,
-      source: Source, qp: Map[String, String]): Unit = {
+      table: DataFrame, qp: Map[String, String]): Unit = {
     def fail(code: Int, msg: String): Unit = {
       val err = mapper.createObjectNode(); err.put("error", msg); respond(ex, code, err)
     }
@@ -406,7 +349,7 @@ object ApiServer {
       case "symbol_stats" => // :99-171
         (qp.get("symbol"), qp.get("date")) match {
           case (Some(rawSym), Some(date)) =>
-            val rows = rollupRows(source.dateRange(normalizeSymbol(rawSym), date, date))
+            val rows = rollupRows(Api.dateRangeFromTable(table, normalizeSymbol(rawSym), date, date))
             if (rows.isEmpty) fail(404, s"No data found for $rawSym on $date")
             else {
               val r   = rows.head
@@ -427,15 +370,15 @@ object ApiServer {
       case "daily_summary" => // :174-272
         qp.get("date") match {
           case Some(date) =>
-            val rows = rollupRows(source.dailySummary(date)) // already desc by pct
+            val rows = rollupRows(Api.dailySummaryFromTable(table, date)) // already desc by pct
             // the reference 404s ONLY the no-symbols-at-all case
             // (lambda_analytics.py:224 — no symbol= prefixes listed →
             // "No data found for <date>"); a populated table whose
             // symbols just have no rows ON this date still returns 200
             // with an empty summary there. Match both edges: the
-            // symbol probe (limit 1, metadata-level on a TableSource)
-            // runs only on the already-empty path.
-            if (rows.isEmpty && source.defaultSymbols(1).isEmpty)
+            // symbol probe (limit 1, newest-day pruned) runs only on
+            // the already-empty path.
+            if (rows.isEmpty && defaultSymbols(table, 1).isEmpty)
               fail(404, s"No data found for $date")
             else {
               val out = mapper.createObjectNode()
@@ -461,7 +404,7 @@ object ApiServer {
               java.time.LocalDate.parse(from), java.time.LocalDate.parse(to))
             if (span > 31) fail(400, "Date range cannot exceed 31 days")
             else {
-              val rows = rollupRows(source.dateRange(normalizeSymbol(rawSym), from, to))
+              val rows = rollupRows(Api.dateRangeFromTable(table, normalizeSymbol(rawSym), from, to))
               val out  = mapper.createObjectNode()
               out.put("symbol", rawSym)
               out.put("start_date", from); out.put("end_date", to)
@@ -483,7 +426,7 @@ object ApiServer {
         qp.get("date") match {
           case Some(date) =>
             val limit = qp.get("limit").flatMap(_.toIntOption).getOrElse(10)
-            val rows  = rollupRows(source.dailySummary(date)) // desc by pct
+            val rows  = rollupRows(Api.dailySummaryFromTable(table, date)) // desc by pct
             def side(arr: ArrayNode, picked: Seq[Row]): Unit =
               picked.foreach { r =>
                 val o = arr.addObject()
@@ -516,7 +459,7 @@ object ApiServer {
     * params take precedence over the path tail, like the reference. */
   private def handleAlfaPrice(
       ex: com.sun.net.httpserver.HttpExchange,
-      source: Source, path: String, qp: Map[String, String], cfg: Config): Unit = {
+      table: DataFrame, path: String, qp: Map[String, String], cfg: Config): Unit = {
     val fromQuery = for {
       s <- qp.get("symbol"); i <- qp.get("interval"); p <- qp.get("period")
     } yield (s, i, p)
@@ -537,7 +480,9 @@ object ApiServer {
         val today  = cfg.clock().atZone(java.time.ZoneOffset.UTC).toLocalDate
         val from   = today.minusDays(Api.periodToDays(period).toLong)
         val rows =
-          resampled(source.ohlcv(symbol, Some(from.toString), Some(today.toString), None), interval)
+          Api.resample(
+            Api.getOhlcvFromTable(table, symbol, Some(from.toString), Some(today.toString), None),
+            interval)
             .select(col("bucket_start"), col("open"), col("high"),
               col("low"), col("close"), col("volume").cast("double"))
             .collect()
@@ -624,7 +569,7 @@ object ApiServer {
     * rounded to 2, pct 0 when open ≤ 0. */
   private def handleDashboard(
       ex: com.sun.net.httpserver.HttpExchange,
-      source: Source,
+      table: DataFrame,
       cfg: Config): Unit = {
     def esc(s: String): String =
       s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
@@ -637,8 +582,7 @@ object ApiServer {
         .stripTrailingZeros.toPlainString
     def grouped(v: Long): String = // "{:,}".format — locale-independent
       v.toString.reverse.grouped(3).mkString(",").reverse
-    val symbols = source.defaultSymbols(cfg.latestSymbolCap)
-    val rows = source.latestSummary(symbols)
+    val rows = Api.latestSummaryFromTable(table, defaultSymbols(table, cfg.latestSymbolCap))
       .select(col("symbol"), col("last.open"), col("last.high"),
         col("last.low"), col("last.close"), col("last.v"))
       .collect()
@@ -825,13 +769,10 @@ object ApiServer {
   // Plumbing
   // ---------------------------------------------------------------
 
-  /** Interval aggregation of an already-ranged canonical frame — the
-    * body of [[Api.getOhlcvResampled]], applied after the source's own
-    * (possibly pushed-down) range filter. */
-  private def resampled(base: DataFrame, interval: String): DataFrame =
-    graft.operators.Resample
-      .candles(base, Api.intervalToMinutes(interval) * 60, col("fetch_timestamp"))
-      .orderBy(col("bucket_start"))
+  /** Default /latest symbol list: the first `cap` symbols of the
+    * table's newest landed day. */
+  private def defaultSymbols(table: DataFrame, cap: Int): Seq[String] =
+    Api.symbolsFromTable(table).limit(cap).collect().map(_.getString(0)).toSeq
 
   /** Driver-side normalize of one user-supplied symbol — same branches
     * as [[graft.ohlcv.Normalize.toExchangeSymbol]] /

@@ -1,24 +1,35 @@
 package graft.serving
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import graft.SparkSpec
-import graft.ohlcv.{MockData, Normalize, RawIngest}
-import org.apache.spark.sql.DataFrame
+import graft.ohlcv.{Api, MockData, Normalize, RawIngest, Storage}
+import graft.operators.{Analytics, Dedup}
+import org.apache.spark.metrics.source.HiveCatalogMetrics
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, dayofmonth, month, timestamp_seconds, unix_timestamp, year}
 
 /** Live end-to-end test of the REST layer: JDK http client against the
-  * in-process server, over a normalized mock-candle frame — the same
-  * zero-egress pattern as HttpIngestSpec. */
+  * in-process server, over a partitioned table of normalized mock
+  * candles — the same zero-egress pattern as HttpIngestSpec. */
 class ApiServerSpec extends SparkSpec {
 
   private val mapper = new ObjectMapper()
-  private lazy val candles: DataFrame = {
-    // two symbols × 10 five-minute candles starting 2025-10-08 03:45 UTC,
-    // landed as raw JSON and re-read (blocks needs source_file)
+  private val clock  = () => java.time.Instant.parse("2025-10-08T06:00:00Z")
+  // two symbols × 10 five-minute candles starting 2025-10-08 03:45 UTC,
+  // landed as raw JSON and re-read (blocks needs source_file)
+  private lazy val normalized: DataFrame = {
     val tmp  = java.nio.file.Files.createTempDirectory("graft-apisrv").toString
     val mock = MockData.candles(spark, Seq("NSE:RELIANCE-EQ", "NSE:TCS-EQ"), 10, 1759895100L)
     MockData.envelope(mock, "2025-10-08T04:00:00Z").write.json(s"$tmp/raw")
-    graft.ohlcv.Api.fromNormalized(
-      Normalize.normalize(RawIngest.blocks(RawIngest.readRaw(spark, s"$tmp/raw")), "spec")).cache()
+    Normalize.normalize(RawIngest.blocks(RawIngest.readRaw(spark, s"$tmp/raw")), "spec").cache()
+  }
+  private lazy val candles: DataFrame = Api.fromNormalized(normalized)
+  // the same candles as the served partitioned parquet table
+  private lazy val table: String = {
+    val path = java.nio.file.Files.createTempDirectory("graft-apisrv-tbl").toString + "/table"
+    Storage.writeParquet(normalized, path, "overwrite")
+    path
   }
 
   private def get(server: ApiServer.Server, pathAndQuery: String): (Int, String) = {
@@ -31,13 +42,18 @@ class ApiServerSpec extends SparkSpec {
     (resp.statusCode(), resp.body())
   }
 
-  private def withServer(f: ApiServer.Server => Unit): Unit = {
-    val server = ApiServer.start(
-      () => candles,
-      ApiServer.Config(clock = () => java.time.Instant.parse("2025-10-08T06:00:00Z")))
+  private def withServer(f: ApiServer.Server => Unit): Unit =
+    withServer(ApiServer.Config(clock = clock))(f)
+
+  private def withServer(cfg: ApiServer.Config)(f: ApiServer.Server => Unit): Unit = {
+    val server = ApiServer.startFromTable(spark, table, cfg)
     try f(server)
     finally server.stop()
   }
+
+  /** A JSON body as a tree, anything else (CSV, HTML) as text. */
+  private def parsed(body: String): Any =
+    if (body.startsWith("{")) mapper.readTree(body) else body
 
   test("routes: /symbols, limit validation, 404 envelope") {
     withServer { s =>
@@ -116,64 +132,168 @@ class ApiServerSpec extends SparkSpec {
     // the reference ships a CSV-reader twin of the API
     // (api/api_handler_csv.py) over the S7 partitioned CSV layout;
     // here the same server runs over Storage.writeCsv/readCsv and must
-    // agree with the parquet-backed answers byte-for-byte
+    // agree with the parquet-backed answers on every data route — the
+    // CSV layout is symbol-major, so /latest's newest-day discovery
+    // must parse its leaves too
     val tmp = java.nio.file.Files.createTempDirectory("graft-apisrv-csv").toString
-    val normalized = {
-      val mock = MockData.candles(spark, Seq("NSE:RELIANCE-EQ", "NSE:TCS-EQ"), 10, 1759895100L)
-      MockData.envelope(mock, "2025-10-08T04:00:00Z").write.json(s"$tmp/raw")
-      Normalize.normalize(RawIngest.blocks(RawIngest.readRaw(spark, s"$tmp/raw")), "spec")
-    }
-    graft.ohlcv.Storage.writeCsv(normalized, s"$tmp/csvtbl")
-    val csvCandles = graft.ohlcv.Api.fromNormalized(
-      graft.ohlcv.Storage.readCsv(spark, s"$tmp/csvtbl"))
+    Storage.writeCsv(normalized, s"$tmp/csvtbl")
     val server = ApiServer.start(
-      () => csvCandles,
-      ApiServer.Config(clock = () => java.time.Instant.parse("2025-10-08T06:00:00Z")))
-    try {
-      val fromCsv     = get(server, "/ohlcv/tcs?limit=3")._2
-      val fromParquet = {
-        val s2 = ApiServer.start(() => candles,
-          ApiServer.Config(clock = () => java.time.Instant.parse("2025-10-08T06:00:00Z")))
-        try get(s2, "/ohlcv/tcs?limit=3")._2 finally s2.stop()
+      () => Storage.readCsv(spark, s"$tmp/csvtbl"), ApiServer.Config(clock = clock))
+    try withServer { parquetSrv =>
+      for (q <- Seq(
+          "/symbols", "/symbols?limit=1",
+          "/ohlcv/tcs?limit=3", "/ohlcv/tcs?interval=15m&limit=2",
+          "/ohlcv/reliance?from=2025-10-08&to=2025-10-08",
+          "/latest?symbols=tcs,reliance", "/latest?symbols=", "/latest",
+          "/historical?symbol=reliance&from=2025-10-08&to=2025-10-08",
+          "/historical?symbols=tcs,reliance", "/historical", "/historical?symbol=tcs&format=csv",
+          "/alfaquantz/price/get/tcs,15m,3m",
+          "/analytics?query_type=symbol_stats&symbol=TCS&date=2025-10-08",
+          "/analytics?query_type=daily_summary&date=2025-10-08",
+          "/analytics?query_type=daily_summary&date=2025-10-09",
+          "/analytics?query_type=date_range&symbol=TCS&start_date=2025-10-07&end_date=2025-10-09",
+          "/analytics?query_type=top_movers&date=2025-10-08&limit=1",
+          "/dashboard")) {
+        val (cc, bc) = get(server, q)
+        val (cp, bp) = get(parquetSrv, q)
+        assert(cc === cp, q)
+        assert(parsed(bc) === parsed(bp), s"csv vs parquet diverge on $q")
       }
-      assert(mapper.readTree(fromCsv) === mapper.readTree(fromParquet))
       assert(mapper.readTree(get(server, "/symbols")._2).get("count").asInt === 2)
+      assert(mapper.readTree(get(server, "/latest")._2).get("count").asInt === 2)
     } finally server.stop()
   }
 
   test("startFromTable: partitioned-table serving agrees with the frame-backed server") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-apisrv-tbl").toString
-    val normalized = {
-      val mock = MockData.candles(spark, Seq("NSE:RELIANCE-EQ", "NSE:TCS-EQ"), 10, 1759895100L)
-      MockData.envelope(mock, "2025-10-08T04:00:00Z").write.json(s"$tmp/raw")
-      Normalize.normalize(RawIngest.blocks(RawIngest.readRaw(spark, s"$tmp/raw")), "spec")
+    // every route's answer, computed here from the in-memory fixture
+    // with the Api cores and the Analytics rollups over the
+    // keep-latest-fetch dedup — the frame computations the table-backed
+    // handlers must reproduce value for value. /latest included: the
+    // table answers from the newest day partition only, which on this
+    // single-day fixture is the whole history.
+    val tcs = "NSE:TCS-EQ"; val rel = "NSE:RELIANCE-EQ"; val day = "2025-10-08"
+    def node(f: ObjectNode => Unit): JsonNode = {
+      val o = mapper.createObjectNode(); f(o)
+      mapper.readTree(mapper.writeValueAsString(o)) // numeric node types as parsed
     }
-    graft.ohlcv.Storage.writeParquet(normalized, s"$tmp/table", "overwrite")
-    val clock = () => java.time.Instant.parse("2025-10-08T06:00:00Z")
-    val tableSrv = ApiServer.startFromTable(spark, s"$tmp/table", ApiServer.Config(clock = clock))
-    try withServer { frameSrv =>
-      // /latest included: the table source answers from the newest day
-      // partition only, which on this single-day fixture is the whole
-      // history — envelope shape and values must agree with the frame
-      // server exactly
-      for (q <- Seq(
-          "/ohlcv/tcs?from=2025-10-08&to=2025-10-08&limit=4",
-          "/ohlcv/tcs?interval=15m",
-          "/latest?symbols=tcs,reliance",
-          "/historical?symbol=reliance&from=2025-10-08&to=2025-10-08",
-          "/alfaquantz/price/get/tcs,15m,3m",
-          // analytics: the table source runs the day-pruned rollups —
-          // values must agree with the frame server exactly
-          "/analytics?query_type=symbol_stats&symbol=TCS&date=2025-10-08",
-          "/analytics?query_type=daily_summary&date=2025-10-08",
-          "/analytics?query_type=date_range&symbol=TCS&start_date=2025-10-07&end_date=2025-10-09",
-          "/analytics?query_type=top_movers&date=2025-10-08&limit=1")) {
-        val (ct, bt) = get(tableSrv, q)
-        val (cf, bf) = get(frameSrv, q)
-        assert(ct === cf, q)
-        assert(mapper.readTree(bt) === mapper.readTree(bf), s"table vs frame diverge on $q")
+    def ohlcvRows(df: DataFrame, t: org.apache.spark.sql.Column): Array[Row] =
+      df.select(t, col("open"), col("high"), col("low"), col("close"),
+        col("volume").cast("double")).collect()
+    def putOpt(o: ObjectNode, k: String, r: Row, i: Int): Unit =
+      if (r.isNullAt(i)) o.putNull(k) else o.put(k, r.getDouble(i))
+    def dicts(arr: ArrayNode, rows: Array[Row]): Unit = rows.foreach { r =>
+      val c = arr.addObject()
+      c.put("timestamp", r.getLong(0))
+      c.put("datetime", java.time.Instant.ofEpochSecond(r.getLong(0)).toString)
+      Seq("open", "high", "low", "close").zipWithIndex.foreach { case (k, i) => putOpt(c, k, r, i + 1) }
+      c.put("volume", r.getDouble(5).toLong)
+    }
+    val deduped = Dedup.keepLatest(candles,
+      keys = Seq(col("symbol"), col("ts")), version = Seq(col("fetch_timestamp")))
+    def rollup(df: DataFrame): Array[Row] = df.select(
+      col("symbol"), col("trade_date").cast("string"),
+      col("open").cast("double"), col("close").cast("double"),
+      col("high").cast("double"), col("low").cast("double"),
+      col("volume").cast("long"), col("avg_price").cast("double"),
+      col("num_records").cast("long"),
+      col("price_change").cast("double"), col("price_change_pct").cast("double")).collect()
+    def dayFields(o: ObjectNode, r: Row): Unit = {
+      putOpt(o, "open", r, 2); putOpt(o, "close", r, 3)
+      putOpt(o, "high", r, 4); putOpt(o, "low", r, 5)
+      o.put("volume", r.getLong(6)); putOpt(o, "price_change_pct", r, 10)
+    }
+    val daily = Analytics.dailySummary(deduped, day, col("fetch_timestamp"))
+    def movers(arr: ArrayNode, gainers: Boolean): Unit =
+      rollup(Analytics.topMoversFromDaily(daily, 1, gainers)).foreach { r =>
+        val o = arr.addObject()
+        o.put("symbol", r.getString(0)); putOpt(o, "price_change_pct", r, 10)
+        putOpt(o, "close", r, 3); o.put("volume", r.getLong(6))
       }
-    } finally tableSrv.stop()
+    val alfaFrom = java.time.LocalDate.parse(day).minusDays(90).toString
+    val expected: Seq[(String, JsonNode)] = Seq(
+      s"/ohlcv/tcs?from=$day&to=$day&limit=4" -> node { o =>
+        val rows = ohlcvRows(Api.getOhlcv(candles, tcs, Some(day), Some(day), Some(4)), unix_timestamp(col("ts")))
+        o.put("symbol", tcs); o.put("interval", "5"); dicts(o.putArray("data"), rows)
+        o.put("count", rows.length); o.put("timestamp", clock().toString)
+      },
+      "/ohlcv/tcs?interval=15m" -> node { o =>
+        val rows = ohlcvRows(Api.getOhlcvResampled(candles, tcs, None, None, "15m"), col("bucket_start"))
+        o.put("symbol", tcs); o.put("interval", "15m"); dicts(o.putArray("data"), rows)
+        o.put("count", rows.length); o.put("timestamp", clock().toString)
+      },
+      "/latest?symbols=tcs,reliance" -> node { o =>
+        val rows = Api.latestSummary(candles.filter(col("symbol").isin(tcs, rel)))
+          .select(col("symbol"), col("total_candles"), col("fetch_ts"), col("last.t"),
+            col("last.open"), col("last.high"), col("last.low"), col("last.close"), col("last.v"))
+          .collect()
+        o.putArray("symbols").add(tcs).add(rel)
+        val data = o.putObject("data")
+        rows.foreach { r =>
+          val s = data.putObject(r.getString(0))
+          s.put("symbol", r.getString(0)); putOpt(s, "latest_price", r, 7)
+          s.put("total_candles", r.getLong(1)); s.put("resolution", "5")
+          s.put("timestamp", r.getString(2))
+          val c = s.putArray("last_candle")
+          c.add(r.getLong(3)); (4 to 7).foreach(i => c.add(r.getDouble(i))); c.add(r.getDouble(8).toLong)
+        }
+        o.put("count", rows.length); o.put("timestamp", clock().toString)
+      },
+      s"/historical?symbol=reliance&from=$day&to=$day" -> node { o =>
+        val rows = ohlcvRows(Api.getOhlcv(candles, rel, Some(day), Some(day), None), unix_timestamp(col("ts")))
+        o.putArray("symbols").add(rel); o.put("from_date", day); o.put("to_date", day)
+        val s = o.putObject("data").putObject(rel)
+        s.put("symbol", rel); dicts(s.putArray("candles"), rows); s.put("count", rows.length)
+        o.put("total_records", rows.length); o.put("timestamp", clock().toString)
+      },
+      "/alfaquantz/price/get/tcs,15m,3m" -> node { o =>
+        val rows = ohlcvRows(Api.getOhlcvResampled(candles, tcs, Some(alfaFrom), Some(day), "15m"),
+          col("bucket_start"))
+        o.put("symbol_requested", "tcs"); o.put("symbol_normalized", tcs)
+        o.put("interval", "15m"); o.put("period", "3m")
+        o.put("from_date", alfaFrom); o.put("to_date", day); o.put("count", rows.length)
+        val cs = o.putArray("candles")
+        rows.foreach { r =>
+          val c = cs.addArray()
+          c.add(r.getLong(0)); (1 to 4).foreach(i => c.add(r.getDouble(i))); c.add(r.getDouble(5).toLong)
+        }
+        o.put("timestamp", clock().toString)
+      },
+      s"/analytics?query_type=symbol_stats&symbol=TCS&date=$day" -> node { o =>
+        val r = rollup(Analytics.dateRange(deduped, tcs, day, day, col("fetch_timestamp"))).head
+        o.put("symbol", "TCS"); o.put("date", day)
+        val st = o.putObject("stats")
+        putOpt(st, "open", r, 2); putOpt(st, "close", r, 3)
+        putOpt(st, "high", r, 4); putOpt(st, "low", r, 5)
+        st.put("volume", r.getLong(6)); putOpt(st, "avg_price", r, 7)
+        putOpt(st, "price_change", r, 9); putOpt(st, "price_change_pct", r, 10)
+        st.put("num_records", r.getLong(8))
+      },
+      s"/analytics?query_type=daily_summary&date=$day" -> node { o =>
+        val rows = rollup(daily)
+        o.put("date", day)
+        val sa = o.putArray("summary")
+        rows.foreach { r => val e = sa.addObject(); e.put("symbol", r.getString(0)); dayFields(e, r) }
+        o.put("total_symbols", rows.length)
+      },
+      "/analytics?query_type=date_range&symbol=TCS&start_date=2025-10-07&end_date=2025-10-09" -> node { o =>
+        val rows = rollup(Analytics.dateRange(deduped, tcs, "2025-10-07", "2025-10-09", col("fetch_timestamp")))
+        o.put("symbol", "TCS"); o.put("start_date", "2025-10-07"); o.put("end_date", "2025-10-09")
+        val da = o.putArray("data")
+        rows.foreach { r => val e = da.addObject(); e.put("date", r.getString(1)); dayFields(e, r) }
+        o.put("num_days", rows.length)
+      },
+      s"/analytics?query_type=top_movers&date=$day&limit=1" -> node { o =>
+        o.put("date", day)
+        movers(o.putArray("gainers"), gainers = true)
+        movers(o.putArray("losers"), gainers = false)
+      })
+    withServer { tableSrv =>
+      for ((q, want) <- expected) {
+        val (code, body) = get(tableSrv, q)
+        assert(code === 200, s"$q -> $code: $body")
+        assert(mapper.readTree(body) === want, s"table vs frame diverge on $q")
+      }
+    }
   }
 
   test("table-backed /latest: garbage symbols answer 200 with no data; bare /latest lists newest-day symbols") {
@@ -202,6 +322,16 @@ class ApiServerSpec extends SparkSpec {
       val j = mapper.readTree(b)
       assert(j.get("count").asInt === 2)
       assert(j.get("data").has("NSE:RELIANCE-EQ") && j.get("data").has("NSE:TCS-EQ"))
+
+      // each request lists the table once, however many symbols, parts
+      // or fallbacks its answer has: files discovered = one listing
+      val oneListing = Storage.readParquet(spark, s"$tmp/table").inputFiles.length.toLong
+      for (q <- Seq("/historical?symbols=tcs,reliance,infy", "/historical", "/latest",
+          "/dashboard", "/analytics?query_type=daily_summary&date=2025-10-09")) {
+        HiveCatalogMetrics.reset()
+        assert(get(srv, q)._1 === 200, q)
+        assert(HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount === oneListing, q)
+      }
     } finally srv.stop()
   }
 
@@ -276,10 +406,8 @@ class ApiServerSpec extends SparkSpec {
   test("daily_summary over a completely EMPTY source: the reference's 404 envelope, not a 200 with an empty array") {
     // lambda_analytics.py:213-224 — no symbol= prefixes listed at all
     // → 404 "No data found for <date>"
-    val empty  = candles.limit(0)
-    val server = ApiServer.start(
-      () => empty,
-      ApiServer.Config(clock = () => java.time.Instant.parse("2025-10-08T06:00:00Z")))
+    val empty  = normalized.limit(0)
+    val server = ApiServer.start(() => empty, ApiServer.Config(clock = clock))
     try {
       val (c, b) = get(server, "/analytics?query_type=daily_summary&date=2025-10-08")
       assert(c === 404)
@@ -382,18 +510,21 @@ class ApiServerSpec extends SparkSpec {
 
   test("null OHLCV fields degrade to JSON nulls, not a 500") {
     val s = spark; import s.implicits._
-    val frame = Seq(
+    val rows = Seq(
       ("NSE:NULLY-EQ", 1759895100L, Some(1.0), Some(2.0), Some(0.5), None: Option[Double], Some(10.0), "f1"),
       ("NSE:NULLY-EQ", 1759895400L, Some(1.1), Some(2.1), Some(0.6), Some(1.9), Some(11.0), "f1"),
       // a symbol whose EVERY close is null — its daily rollup's close
       // and derived columns are null end to end
       ("NSE:NULLZ-EQ", 1759895100L, Some(1.0), Some(2.0), Some(0.5), None: Option[Double], Some(10.0), "f1"))
-      .toDF("symbol", "tsu", "open", "high", "low", "close", "volume", "fetch_timestamp")
-      .withColumn("ts", org.apache.spark.sql.functions.timestamp_seconds(
-        org.apache.spark.sql.functions.col("tsu"))).drop("tsu")
-    val server = ApiServer.start(
-      () => frame,
-      ApiServer.Config(clock = () => java.time.Instant.parse("2025-10-08T06:00:00Z")))
+      .toDF("symbol", "timestamp_unix", "open", "high", "low", "close", "volume", "fetch_timestamp")
+    val ts   = timestamp_seconds(col("timestamp_unix"))
+    val path = java.nio.file.Files.createTempDirectory("graft-apisrv-null").toString + "/table"
+    Storage.writeParquet(
+      rows.withColumn("year", year(ts)).withColumn("month", month(ts))
+        .withColumn("day", dayofmonth(ts))
+        .withColumn("symbol_clean", Normalize.cleanSymbol(col("symbol"))),
+      path, "overwrite")
+    val server = ApiServer.startFromTable(spark, path, ApiServer.Config(clock = clock))
     try {
       val (code, body) = get(server, "/ohlcv/nully")
       assert(code === 200)
@@ -437,12 +568,7 @@ class ApiServerSpec extends SparkSpec {
     val mock2 = MockData.candles(spark, Seq("NSE:RELIANCE-EQ", "NSE:TCS-EQ"), 2, 1759898700L)
     MockData.envelope(mock2, "2025-10-08T05:00:00Z").coalesce(1).write.json(s"$landDir/f2")
 
-    val server = ApiServer.start(
-      () => candles,
-      ApiServer.Config(
-        clock = () => java.time.Instant.parse("2025-10-08T06:00:00Z"),
-        filesDir = Some(landDir)))
-    try {
+    withServer(ApiServer.Config(clock = clock, filesDir = Some(landDir))) { server =>
       val (code, body) = get(server, "/files")
       assert(code === 200)
       val j = mapper.readTree(body)
@@ -480,19 +606,14 @@ class ApiServerSpec extends SparkSpec {
       // server memory (the response still answers with what exists)
       val (cBig, bBig) = get(server, "/files?limit=2000000000")
       assert(cBig === 200 && mapper.readTree(bBig).get("count").asInt === 2)
-    } finally server.stop()
+    }
   }
 
   test("GET /dashboard: the HTML page carries the SAME numbers as the JSON endpoints (/latest table, /files inventory)") {
     val landDir = java.nio.file.Files.createTempDirectory("graft-dash").toString
     MockData.envelope(MockData.candles(spark, Seq("NSE:TCS-EQ"), 3, 1759895100L),
       "2025-10-08T04:00:00Z").coalesce(1).write.json(s"$landDir/f1")
-    val server = ApiServer.start(
-      () => candles,
-      ApiServer.Config(
-        clock = () => java.time.Instant.parse("2025-10-08T06:00:00Z"),
-        filesDir = Some(landDir)))
-    try {
+    withServer(ApiServer.Config(clock = clock, filesDir = Some(landDir))) { server =>
       val (code, html) = get(server, "/dashboard")
       assert(code === 200)
       assert(html.contains("Stock Price Feed Dashboard"))
@@ -530,17 +651,14 @@ class ApiServerSpec extends SparkSpec {
 
       // the clock stamp the JSON endpoints carry is on the page too
       assert(html.contains("2025-10-08T06:00:00Z"))
-    } finally server.stop()
+    }
   }
 
   test("/file/{key} refuses files over the configured byte cap with 413") {
     val landDir = java.nio.file.Files.createTempDirectory("graft-files-cap").toString
     MockData.envelope(MockData.candles(spark, Seq("NSE:TCS-EQ"), 3, 1759895100L),
       "2025-10-08T04:00:00Z").coalesce(1).write.json(s"$landDir/f1")
-    val server = ApiServer.start(
-      () => candles,
-      ApiServer.Config(filesDir = Some(landDir), fileDetailMaxBytes = 10L))
-    try {
+    withServer(ApiServer.Config(filesDir = Some(landDir), fileDetailMaxBytes = 10L)) { server =>
       val (code, body) = get(server, "/files")
       val key = mapper.readTree(body).get("files").get(0).get("key").asText
       assert(code === 200)
@@ -549,7 +667,7 @@ class ApiServerSpec extends SparkSpec {
       val d = mapper.readTree(bd)
       assert(d.get("error").asText === "File too large")
       assert(d.get("max_bytes").asLong === 10L)
-    } finally server.stop()
+    }
   }
 
   test("/files without a configured dir stays 404") {
