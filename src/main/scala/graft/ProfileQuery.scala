@@ -9,8 +9,9 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
   * records it) plus the wall time of each pass — the "where do the
   * seconds go" breakdown that explain() alone can't give. Also prints
   * job-level wall times via a listener so multi-job queries (iterative
-  * contraction, localCheckpoint materializations, broadcasts) show
-  * their per-job cost. Not part of the driver contract.
+  * contraction, eager `Materialize.truncate` materializations,
+  * broadcasts) show their per-job cost. Not part of the driver
+  * contract.
   *
   * Usage: runMain graft.ProfileQuery <query>...
   */

@@ -134,27 +134,28 @@ object Storage {
     }
   }
 
-  /** The newest `k` data files under `dir` by modification time
+  /** The newest `k` (≥ 1) data files under `dir` by modification time
     * (metadata-only listing via the Hadoop FileSystem API — works on
-    * any supported store, S3A included). Hidden/temp files (dot or
-    * underscore prefixed) are skipped like Spark's own file index
-    * does; `modifiedAfterIso` pre-filters before the cap so the two
-    * knobs compose the same way as the reference's list-then-cap. */
+    * any supported store, S3A included), kept in O(k) driver memory by
+    * [[newestInventory]]. Hidden/temp files (dot or underscore
+    * prefixed) are skipped like Spark's own file index does;
+    * `modifiedAfterIso` pre-filters before the cap so the two knobs
+    * compose the same way as the reference's list-then-cap. */
   def newestFiles(
       spark: SparkSession,
       dir: String,
       k: Int,
       modifiedAfterIso: Option[String] = None): Seq[String] =
-    fileInventory(spark.sparkContext.hadoopConfiguration, dir, modifiedAfterIso)
-      .take(k).map(_._1)
+    newestInventory(spark.sparkContext.hadoopConfiguration, dir, k,
+      modifiedAfterIso = modifiedAfterIso).map(_._1)
 
   /** Newest-first metadata INVENTORY of the data files under `dir`:
     * (absolute path, bytes, modified epoch millis). Metadata-only
     * recursive listing on any supported store; hidden/temp files
     * (dot/underscore prefixed) skipped like Spark's own file index;
-    * optional recency pre-filter. Shared core of [[newestFiles]] and
-    * the serving layer's `/files` dashboard surface (reference
-    * `scripts/dashboard.py:48-93`). */
+    * optional recency pre-filter. Holds the whole listing in driver
+    * memory and sorts it: the plain reference the bounded
+    * [[newestInventory]] is checked against. */
   def fileInventory(
       conf: org.apache.hadoop.conf.Configuration,
       dir: String,

@@ -4,7 +4,6 @@ import graft.ohlcv.Storage
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
 
 /** Table maintenance for partitioned parquet tables: partition-pruned
   * upsert (merge-on-write) and small-file compaction. Extension beyond
@@ -55,8 +54,9 @@ object Maintenance {
     * has no existing side, so the first write is the batch deduped by
     * the same rule, with no fan-out cap. `updates` is evaluated once:
     * unless the caller already persisted it, it is persisted for the
-    * call and released on every exit (Spark's persist-write-unpersist
-    * pattern for `foreachBatch`). Returns the rewritten tuples. */
+    * call and released on every exit ([[Materialize.scoped]], Spark's
+    * persist-write-unpersist pattern for `foreachBatch`). Returns the
+    * rewritten tuples. */
   def upsertPartitions(
       spark: SparkSession,
       path: String,
@@ -69,38 +69,37 @@ object Maintenance {
     require(
       partCols.forall(updates.columns.contains) && keyCols.forall(updates.columns.contains),
       s"updates must carry partition columns $partCols and keys $keyCols")
-    val ownPersist = updates.storageLevel == StorageLevel.NONE
-    if (ownPersist) updates.persist()
-    try {
+    Materialize.scoped(updates) { updates =>
       val touched = updates.select(partCols.map(col): _*).distinct()
         .collect().map(_.toSeq).toIndexedSeq
-      if (touched.isEmpty) return touched
-      val root = new Path(path)
-      val merged =
-        if (!root.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(root))
-          Dedup.keepLatest(updates, keyCols.map(col), Seq(col(version)))
-        else {
-          require(touched.size <= MaxUpsertPartitionFanout,
-            s"upsert batch touches ${touched.size} partitions (> $MaxUpsertPartitionFanout); " +
-              "split the batch or coarsen the partition key")
-          val table    = spark.read.parquet(path)
-          val existing = table.filter(Storage.inPartitions(table, partCols, touched))
-          // updates win ties via a side marker ordered AFTER version
-          Dedup.keepLatest(
-            existing.withColumn("__src", lit(0))
-              .unionByName(updates.withColumn("__src", lit(1))),
-            keyCols.map(col),
-            Seq(col(version), col("__src")))
-            .drop("__src")
-        }
-      // per-write dynamic option, NOT a session conf set (a leaked
-      // session-level 'dynamic' would change unrelated static writes)
-      Storage.clusteredWrite(merged, partCols)
-        .mode("overwrite") // dynamic: replaces ONLY partitions present in `merged`
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(path)
+      if (touched.nonEmpty) {
+        val root = new Path(path)
+        val merged =
+          if (!root.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(root))
+            Dedup.keepLatest(updates, keyCols.map(col), Seq(col(version)))
+          else {
+            require(touched.size <= MaxUpsertPartitionFanout,
+              s"upsert batch touches ${touched.size} partitions (> $MaxUpsertPartitionFanout); " +
+                "split the batch or coarsen the partition key")
+            val table    = spark.read.parquet(path)
+            val existing = table.filter(Storage.inPartitions(table, partCols, touched))
+            // updates win ties via a side marker ordered AFTER version
+            Dedup.keepLatest(
+              existing.withColumn("__src", lit(0))
+                .unionByName(updates.withColumn("__src", lit(1))),
+              keyCols.map(col),
+              Seq(col(version), col("__src")))
+              .drop("__src")
+          }
+        // per-write dynamic option, NOT a session conf set (a leaked
+        // session-level 'dynamic' would change unrelated static writes)
+        Storage.clusteredWrite(merged, partCols)
+          .mode("overwrite") // dynamic: replaces ONLY partitions present in `merged`
+          .option("partitionOverwriteMode", "dynamic")
+          .parquet(path)
+      }
       touched
-    } finally if (ownPersist) updates.unpersist(blocking = true)
+    }
   }
 
   /** Per-partition file census of a Hive-partitioned table — the

@@ -738,7 +738,6 @@ object Profile {
     require(rounds >= 1 && rounds <= 64, s"rounds in [1, 64]: $rounds")
     require(etaPpm >= 0L && etaPpm <= 1000000L, s"etaPpm in [0, 1e6]: $etaPpm")
     require(cells >= 2, s"cells must be >= 2: $cells")
-    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val wAll  = Window.partitionBy() // bounded: ≤ cells·|sources| rows
     // the ONLY corpus-sized pass
     val partials = df
@@ -746,13 +745,13 @@ object Profile {
       .select(col("source"), domainCell(col("t"), cells).as("b"))
       .groupBy(col("source"), col("b"))
       .agg(count(lit(1)).as("cnt"))
-      .persist(level)
+      .persist(Materialize.level)
     val occ = partials
       .groupBy(col("source")).agg(sum(col("cnt")).as("n_occ"))
       .withColumn("__nall", sum(col("n_occ")).over(wAll))
       .select(col("source"), col("n_occ"),
         expr("cast(n_occ as decimal(38,0)) * 1000000 div __nall").as("w_ppm"))
-      .persist(level)
+      .persist(Materialize.level)
     var w   = occ.select(col("source"), col("w_ppm"))
     var out = Vector.empty[DataFrame]
     for (r <- 1 to rounds) {
@@ -786,7 +785,7 @@ object Profile {
         .withColumn("__wut", sum(col("__wu")).over(wAll))
         .select(col("source"), col("loss_ppm"), col("excess_ppm"),
           expr("__wu * 1000000L div greatest(__wut, 1L)").as("w_ppm"))
-        .persist(level) // |sources| rows: round r+1 and the output read it, not its lineage
+        .persist(Materialize.level) // |sources| rows: round r+1 and the output read it, not its lineage
       out = out :+ stepped
         .select(col("source"), lit(r.toLong).as("round"),
           col("loss_ppm"), col("excess_ppm"), col("w_ppm"))

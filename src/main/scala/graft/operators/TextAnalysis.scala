@@ -933,16 +933,15 @@ object TextAnalysis {
     * conditional sum per K. */
   def vocabCoverage(docs: DataFrame, text: Column, ks: Seq[Int]): DataFrame = {
     require(ks.nonEmpty && ks.forall(_ > 0), s"ks must be positive: $ks")
-    // The vocab relation is materialized IN-PLAN (localCheckpoint, per
-    // invocation — batch-only operator): the two-phase rank's branches
+    // The vocab relation is materialized IN-PLAN (Materialize.truncate,
+    // per invocation — batch-only operator): the two-phase rank's branches
     // plus its min/max discovery (the occurrence count has no a-priori
     // bound, so keyBounds can't apply) would otherwise re-run the
     // corpus-wide explode+agg up to 4× (guide §1.2 step 1; Ranking's
     // documented lever 2).
-    val counts = docs
+    val counts = Materialize.truncate(docs
       .select(explode(tokens(text)).as("t"))
-      .groupBy(col("t")).agg(count(lit(1)).as("occ"))
-      .localCheckpoint()
+      .groupBy(col("t")).agg(count(lit(1)).as("occ")))
     val ranked = Ranking.globalRank(counts, -col("occ"), Seq(col("t")))
     val aggCols =
       count(lit(1)).as("vocab_size") +:
@@ -1325,7 +1324,8 @@ object TextAnalysis {
     * map-only greedy merge rewrite (SQL `aggregate` fold, codegen'd —
     * left-to-right application, the BPE apply rule). The working
     * relation is re-persisted and the previous round freed every
-    * round, so lineage stays O(1) instead of O(rounds). */
+    * round, so lineage stays O(1) instead of O(rounds); whichever
+    * one is live is released on every exit, a throw included. */
   def bpeTrain(
       docs: DataFrame,
       text: Column,
@@ -1335,7 +1335,6 @@ object TextAnalysis {
     require(minCount >= 1, s"minCount must be positive (got $minCount)")
     val spark = docs.sparkSession
     import spark.implicits._
-    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // the ONLY corpus-sized pass: word-frequency table, then chars
     var vocab = docs
       .select(explode(tokens(text)).as("w"))
@@ -1343,45 +1342,46 @@ object TextAnalysis {
       .groupBy(col("w")).agg(count(lit(1)).as("n"))
       .select(expr("transform(sequence(1, char_length(w)), i -> substr(w, i, 1))").as("syms"),
         col("n"))
-      .persist(level)
-    vocab.count()
+      .persist(Materialize.level)
     val merges = Seq.newBuilder[(Int, String, String, String, Long)]
     var rank   = 0
     var done   = false
-    while (rank < nMerges && !done) {
-      val top = vocab
-        .select(posexplode(col("syms")).as(Seq("i", "l")), col("syms"), col("n"))
-        .filter(col("i") < size(col("syms")) - 1)
-        .select(col("l"), element_at(col("syms"), col("i") + 2).as("r"), col("n"))
-        .groupBy(col("l"), col("r")).agg(sum(col("n")).as("cnt"))
-        .orderBy(desc("cnt"), asc("l"), asc("r"))
-        .take(1)
-      if (top.isEmpty || top.head.getAs[Long]("cnt") < minCount) done = true
-      else {
-        val (l, r) = (top.head.getAs[String]("l"), top.head.getAs[String]("r"))
-        rank += 1
-        merges += ((rank, l, r, l + r, top.head.getAs[Long]("cnt")))
-        // greedy left-to-right merge — the BPE apply rule ("aaa" under
-        // (a,a) becomes ["aa","a"]); pure codegen'd fold, no UDF
-        val lLit = lit(l); val rLit = lit(r)
-        val next = vocab
-          .select(
-            aggregate(
-              col("syms"),
-              expr("CAST(array() AS array<string>)"),
-              (acc, x) =>
-                when(
-                  size(acc) > 0 && element_at(acc, -1) === lLit && x === rLit,
-                  concat(slice(acc, lit(1), size(acc) - 1), array(concat(lLit, rLit))))
-                  .otherwise(concat(acc, array(x)))).as("syms"),
-            col("n"))
-          .persist(level)
-        next.count()
-        vocab.unpersist()
-        vocab = next
+    try {
+      vocab.count()
+      while (rank < nMerges && !done) {
+        val top = vocab
+          .select(posexplode(col("syms")).as(Seq("i", "l")), col("syms"), col("n"))
+          .filter(col("i") < size(col("syms")) - 1)
+          .select(col("l"), element_at(col("syms"), col("i") + 2).as("r"), col("n"))
+          .groupBy(col("l"), col("r")).agg(sum(col("n")).as("cnt"))
+          .orderBy(desc("cnt"), asc("l"), asc("r"))
+          .take(1)
+        if (top.isEmpty || top.head.getAs[Long]("cnt") < minCount) done = true
+        else {
+          val (l, r) = (top.head.getAs[String]("l"), top.head.getAs[String]("r"))
+          rank += 1
+          merges += ((rank, l, r, l + r, top.head.getAs[Long]("cnt")))
+          // greedy left-to-right merge — the BPE apply rule ("aaa" under
+          // (a,a) becomes ["aa","a"]); pure codegen'd fold, no UDF
+          val lLit = lit(l); val rLit = lit(r)
+          val next = vocab
+            .select(
+              aggregate(
+                col("syms"),
+                expr("CAST(array() AS array<string>)"),
+                (acc, x) =>
+                  when(
+                    size(acc) > 0 && element_at(acc, -1) === lLit && x === rLit,
+                    concat(slice(acc, lit(1), size(acc) - 1), array(concat(lLit, rLit))))
+                    .otherwise(concat(acc, array(x)))).as("syms"),
+              col("n"))
+            .persist(Materialize.level)
+          // `next` becomes the live vocab whether or not its count throws
+          try next.count()
+          finally { Materialize.release(vocab); vocab = next }
+        }
       }
-    }
-    vocab.unpersist()
+    } finally Materialize.release(vocab)
     merges.result().toDF("rank", "left", "right", "merged", "cnt")
   }
 

@@ -1266,51 +1266,15 @@ object TextDedup {
     expandRepPairs(repPairs, members, self, Seq("jaccard"), "doc_a", "doc_b")
   }
 
-  /** Lineage-truncation strategies for the iterative operators below.
-    * [[Checkpoint.local]] (default) caches round results on executors —
-    * fast, but the blocks die with an executor, acceptable in local
-    * mode and short jobs. On a real cluster pass [[Checkpoint.reliable]]
-    * (after `sc.setCheckpointDir(...)`) so a 100-TB run survives
-    * executor loss. [[Checkpoint.none]] only for tiny inputs where
-    * plan growth across rounds is harmless.
-    *
-    * Each strategy has an EAGER form (`initial` — materialized by its
-    * own job, used once for the canonicalized input) and a LAZY form
-    * (`round` — marked for truncation but materialized BY the
-    * convergence probe's job, so each contraction round submits ONE
-    * job instead of checkpoint-materialize + probe; guide §2.1/§2.6 —
-    * at cluster latencies every extra job per round is a scheduler
-    * round trip). */
-  sealed trait Checkpoint {
-    private[operators] def initial(df: DataFrame): DataFrame
-    private[operators] def round(df: DataFrame): DataFrame
-  }
-  object Checkpoint {
-    val local: Checkpoint = new Checkpoint {
-      private[operators] def initial(df: DataFrame) = df.localCheckpoint()
-      private[operators] def round(df: DataFrame)   = df.localCheckpoint(eager = false)
-    }
-    val reliable: Checkpoint = new Checkpoint {
-      private[operators] def initial(df: DataFrame) = df.checkpoint()
-      private[operators] def round(df: DataFrame)   = df.checkpoint(eager = false)
-    }
-    val none: Checkpoint = new Checkpoint {
-      private[operators] def initial(df: DataFrame) = df
-      private[operators] def round(df: DataFrame)   = df
-    }
-  }
-
   /** Connected components over a near-duplicate pair relation
     * (doc_a, doc_b) — the dedup DECISION step: every doc in a
     * component keeps/drops together, keeper = component minimum.
     * Returns (doc_id, cluster_id) for documents appearing in ≥1 pair.
     * Delegates to [[starContract]]; see it for algorithm and scale
-    * notes. */
-  def dedupClusters(
-      pairs: DataFrame,
-      maxIter: Int = 30,
-      checkpoint: Checkpoint = Checkpoint.local): DataFrame =
-    starContract(pairs, maxIter, checkpoint)._1
+    * notes; whether its truncations survive executor loss follows the
+    * deployment's checkpoint directory, not an argument. */
+  def dedupClusters(pairs: DataFrame, maxIter: Int = 30): DataFrame =
+    starContract(pairs, maxIter)._1
 
   /** Connected components by alternating large-star / small-star
     * contraction (the public MapReduce CC algorithm of Kiveris et al.,
@@ -1319,30 +1283,25 @@ object TextDedup {
     * propagation — a million-doc near-dup CHAIN costs ~20 rounds here
     * where propagation would need a million. Each round is two
     * aggregate+join rewrites of the canonical (child > parent) edge
-    * set and ONE symmetric-difference convergence job; rounds are
-    * lineage-truncated via `checkpoint` and superseded rounds
-    * unpersisted. A non-converged run THROWS rather than silently
-    * returning a split clustering.
+    * set and ONE symmetric-difference convergence job. The input is
+    * truncated eagerly and each round lazily ([[Materialize.truncate]]:
+    * reliable under a checkpoint directory); superseded rounds are
+    * released, so a finished call holds two truncations, the input and
+    * the final round. A non-converged run releases both and THROWS
+    * rather than silently returning a split clustering.
     *
     * Returns (labels, rounds) — rounds exposed so callers (and the
     * spec) can assert the logarithmic bound. */
-  def starContract(
-      pairs: DataFrame,
-      maxIter: Int = 30,
-      checkpoint: Checkpoint = Checkpoint.local): (DataFrame, Int) = {
+  def starContract(pairs: DataFrame, maxIter: Int = 30): (DataFrame, Int) = {
     val a = col("doc_a"); val b = col("doc_b")
-    // Under the local and reliable strategies `pairs` is evaluated
-    // ONCE: the initial checkpoint keeps the canonicalized relation
-    // INCLUDING degenerate self-pairs, so the selfOnly labeling at the
-    // end reads this materialization instead of re-running the
-    // caller's (possibly join-heavy) pair source a second time (r15 —
-    // for the hamming verdict chains the old selfOnly subtree
-    // re-evaluated the whole band self-join). [[Checkpoint.none]]
-    // materializes nothing, so there every use re-evaluates `pairs`.
-    val canon = checkpoint.initial(
-      pairs
-        .select(greatest(a, b).as("src"), least(a, b).as("dst"))
-        .distinct())
+    // `pairs` is evaluated ONCE: the initial truncation keeps the
+    // canonicalized relation INCLUDING degenerate self-pairs, so the
+    // selfOnly labeling at the end reads this materialization instead
+    // of re-running the caller's (possibly join-heavy) pair source a
+    // second time (r15 — for the hamming verdict chains the old
+    // selfOnly subtree re-evaluated the whole band self-join).
+    val canon = Materialize.truncate(
+      pairs.select(greatest(a, b).as("src"), least(a, b).as("dst")).distinct())
     var cur: DataFrame = canon.filter(col("src") =!= col("dst"))
     var iter      = 0
     var converged = false
@@ -1369,12 +1328,12 @@ object TextDedup {
       // canonical form) neighbors to their minimum — stars flatten
       // onto the root.
       val ssMins = ls.groupBy("src").agg(min(col("dst")).as("m"))
-      val next = checkpoint.round(
+      val next = Materialize.truncate(
         ls.join(ssMins, "src")
           .select(col("dst").as("src"), col("m").as("dst"))
           .unionByName(ssMins.select(col("src"), col("m").as("dst")))
           .filter(col("src") =!= col("dst"))
-          .distinct())
+          .distinct(), eager = false)
       // Convergence = `next` IS a star forest (then both ops are
       // identities): every child has exactly one parent AND no child
       // is itself a parent. Detected in the round that PRODUCES the
@@ -1383,15 +1342,15 @@ object TextDedup {
       // (src > dst) makes each star's root its smallest node, and the
       // ops preserve connectivity, so star roots are component minima.
       //
-      // The probe is the round's ONLY action: `next` is checkpointed
+      // The probe is the round's ONLY action: `next` is truncated
       // LAZILY, so this count's job materializes it while computing
       // the violation counts — one job submission per round where the
-      // eager-checkpoint + isEmpty form paid two, plus isEmpty's
+      // eager-truncate + isEmpty form paid two, plus isEmpty's
       // executeTake partition escalation on the converged (empty)
       // round (guide §2.1/§2.6: each job is a scheduler round trip).
       // Both violation kinds fold into ONE aggregation over ONE scan
       // of `next` — a single scan matters beyond byte counts, because
-      // two map stages over a lazily-checkpointed relation would race
+      // two map stages over a lazily-truncated relation would race
       // its materialization and compute the LS+SS round twice.
       // Per-node edge roles from the explode: c = times a child
       // (c > 1 ⇔ multiple parents), p = times a parent (c > 0 AND
@@ -1408,12 +1367,15 @@ object TextDedup {
         .agg(sum(col("e.c")).as("c"), sum(col("e.p")).as("p"))
         .filter(col("c") > 1L || (col("c") > 0L && col("p") > 0L))
       converged = viol.count() == 0L
-      cur.unpersist()
+      // round 1's `cur` is a filter over `canon`, so its release frees
+      // nothing; every later one frees the superseded round
+      Materialize.release(cur)
       cur = next
       iter += 1
     }
     if (!converged) {
-      cur.unpersist()
+      Materialize.release(cur)
+      Materialize.release(canon)
       throw new IllegalStateException(
         s"starContract did not converge in $maxIter rounds (rounds grow " +
           "logarithmically in component size — raise maxIter)")
@@ -1427,7 +1389,7 @@ object TextDedup {
     // contraction — label them as their own singleton cluster so the
     // "every doc appearing in ≥1 pair gets a label" contract holds for
     // any pair source, not just doc_a < doc_b ones. Served from the
-    // canonicalized checkpoint (already distinct), never from `pairs`.
+    // canonicalized truncation (already distinct), never from `pairs`.
     val selfOnly = canon
       .filter(col("src") === col("dst"))
       .select(col("src").as("doc_id"))

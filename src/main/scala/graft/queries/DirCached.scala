@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.operators.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-(session, dir) materialized-intermediate cache — the local
@@ -14,13 +15,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * LIFECYCLE (the round-12 ×100 heap finding): resident artifacts are
   * ∝ corpus, so a suite run over a big corpus must be able to (a) park
-  * them on disk instead of heap — `SPARK_GRAFT_ARTIFACT_LEVEL=DISK_ONLY`
-  * flips every artifact's storage level for the JVM, matching what a
-  * real pipeline does with stage outputs (they live in the object
-  * store, not executor memory) — and (b) RELEASE them between suite
-  * chunks via [[DirCached.releaseAll]], once a chunk's last consumer
-  * ran. Heap then sizes to the working set of one chunk, not the
-  * union of every chunk's artifacts. */
+  * them on disk instead of heap — [[graft.operators.Materialize.level]]
+  * (`SPARK_GRAFT_ARTIFACT_LEVEL=DISK_ONLY`) flips the storage level of
+  * every materialization for the JVM, these artifacts, in-plan
+  * truncations and per-call persists alike, matching what a real
+  * pipeline does with stage outputs (they live in the object store,
+  * not executor memory) — and (b) RELEASE them between suite chunks
+  * via [[DirCached.releaseAll]], once a chunk's last consumer ran.
+  * Heap then sizes to the working set of one chunk, not the union of
+  * every chunk's artifacts. */
 private[graft] final class DirCached(val name: String) {
   DirCached.register(this)
 
@@ -45,27 +48,26 @@ private[graft] final class DirCached(val name: String) {
         // cache batches; the cost still lands in the FIRST consumer's
         // run (apply is called at query-construction time, inside any
         // caller's timed region), it is just attributed by name now.
-        // A build that fails is unpersisted before the error propagates,
+        // A build that fails is released before the error propagates,
         // so no cached copy outlives it and a retry persists only its own.
-        val df = build.persist(DirCached.level)
+        val df = build.persist(Materialize.level)
         val t0 = System.nanoTime()
         try df.count()
-        catch { case e: Throwable => df.unpersist(blocking = true); throw e }
+        catch { case e: Throwable => Materialize.release(df); throw e }
         DirCached.recordBuild(name, dir, (System.nanoTime() - t0) / 1e9)
         df
       })
     }
 
-  /** Unpersist + drop this cache's entries for `s`. Returns how many
-    * artifacts were released. Blocking=false: the executor frees the
-    * blocks asynchronously; the next consumer (if any — callers release
-    * AFTER the last one) would simply rebuild. */
+  /** Release + drop this cache's entries for `s`. Returns how many
+    * artifacts were released; the next consumer (if any — callers
+    * release AFTER the last one) would simply rebuild. */
   private[graft] def release(s: SparkSession): Int =
     cache.synchronized {
       val perDir = cache.remove(s)
       if (perDir == null) 0
       else {
-        perDir.values.foreach(df => scala.util.Try(df.unpersist(blocking = false)))
+        perDir.values.foreach(df => scala.util.Try(Materialize.release(df)))
         perDir.size
       }
     }
@@ -95,19 +97,6 @@ private[graft] object DirCached {
     buildLog.synchronized {
       buildLog.toSeq.groupBy(_._1._1).map { case (n, xs) => n -> xs.map(_._2).sum }
         .toSeq.sortBy(-_._2)
-    }
-
-  /** Artifact storage level for this JVM. Default MEMORY_AND_DISK (the
-    * interactive/bench sweet spot at sf0.1); scale-suite runs set
-    * SPARK_GRAFT_ARTIFACT_LEVEL=DISK_ONLY so the heap holds the
-    * working set, not the corpus-proportional artifact union. */
-  private[queries] lazy val level: org.apache.spark.storage.StorageLevel =
-    sys.env.get("SPARK_GRAFT_ARTIFACT_LEVEL").map(_.trim.toUpperCase(java.util.Locale.ROOT)) match {
-      case Some("DISK_ONLY") => org.apache.spark.storage.StorageLevel.DISK_ONLY
-      case Some("MEMORY_AND_DISK") | None => org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      case Some(other) =>
-        throw new IllegalArgumentException(
-          s"SPARK_GRAFT_ARTIFACT_LEVEL must be DISK_ONLY or MEMORY_AND_DISK (got '$other')")
     }
 
   /** Release every registered cache's artifacts for `s` (all query

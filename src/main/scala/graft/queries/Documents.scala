@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.operators.{Multimodal, Packing, Profile, Ranking, Relevance, Similarity, Snapshot, TextAnalysis, TextDedup}
+import graft.operators.{Materialize, Multimodal, Packing, Profile, Ranking, Relevance, Similarity, Snapshot, TextAnalysis, TextDedup}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -911,13 +911,12 @@ object Documents {
     "q114_perplexity_buckets" -> ((s, dir) => {
       // Scores against the shared train-once bigram prob table, and
       // the compact (doc_id, avg_p_ppm) relation is materialized
-      // IN-PLAN (localCheckpoint, per run) so the ntile's two branches
-      // read it instead of re-running the occurrence join (r15).
-      val scored = TextAnalysis.bigramLmScore(
-        Tables.documents(s, dir), col("doc_id"), col("text"),
-        model = Some(sharedBigramModel(s, dir)))
-        .select(col("doc_id"), col("avg_p_ppm"))
-        .localCheckpoint()
+      // IN-PLAN (Materialize.truncate, per run) so the ntile's two
+      // branches read it instead of re-running the occurrence join (r15).
+      val scored = Materialize.truncate(TextAnalysis.bigramLmScore(
+          Tables.documents(s, dir), col("doc_id"), col("text"),
+          model = Some(sharedBigramModel(s, dir)))
+        .select(col("doc_id"), col("avg_p_ppm")))
       // avg_p_ppm is a per-bigram mean of unsmoothed MLE bigram
       // probabilities quantized to ppm ((c2·10^6) div c1, and c2 ≤ c1
       // — Laplace smoothing lives in dsirWeights, not here) — provably
@@ -1799,17 +1798,16 @@ object Documents {
     // a single-reducer global window — admit while cum <= budget.
     "q192_budget_selection" -> ((s, dir) => {
       // Scored PER RUN (score-inline analysis form; q197 is the
-      // artifact twin) but materialized IN-PLAN (localCheckpoint,
+      // artifact twin) but materialized IN-PLAN (Materialize.truncate,
       // inside the timed region): the prefix sum's two branches read
       // the compact (doc_id, n_tokens, density) relation instead of
       // each re-running the corpus-wide hashed scorer (r15; Ranking's
       // documented lever 2).
-      val scored = TextAnalysis
+      val scored = Materialize.truncate(TextAnalysis
         .hashedQualityScores(Tables.documents(s, dir), col("doc_id"), col("text"))
         .select(col("doc_id"), col("n_tokens"),
           TextAnalysis.qualityDensityMilli(col("logit_milli"), col("n_tokens"))
-            .as("density_q_milli"))
-        .localCheckpoint()
+            .as("density_q_milli")))
       // keyBounds: density_q_milli ∈ [0, 2000] by construction (each
       // token weight ∈ [-1000, 1000]), so the negated lead key is in
       // [-2000, 0] — no min/max discovery branch, and an out-of-bounds
@@ -1851,24 +1849,22 @@ object Documents {
       val docs = Tables.documents(s, dir)
       // Both scorers run PER RUN (this is the score-inline analysis
       // form; q198 is the artifact twin) but each compact (doc_id,
-      // score) relation is materialized IN-PLAN via localCheckpoint —
-      // inside the timed region, per invocation, nothing outlives the
-      // run — so the two-phase rank's branches (and the DSIR side's
-      // min/max discovery, which has no a-priori bound: dsir_ppm is a
-      // ratio whose denominator can floor to 0 ppm on a huge corpus)
+      // score) relation is materialized IN-PLAN via Materialize.truncate
+      // — inside the timed region, per invocation — so the two-phase
+      // rank's branches (and the DSIR side's min/max discovery, which
+      // has no a-priori bound: dsir_ppm is a ratio whose denominator
+      // can floor to 0 ppm on a huge corpus)
       // read a few-columns-per-doc materialized relation instead of
       // re-evaluating the corpus-wide scorer 2–4× (Ranking's
-      // documented lever 2, guide §1.2 step 1 / §5 localCheckpoint).
-      val qual = TextAnalysis
+      // documented lever 2, guide §1.2 step 1 / §5 lineage truncation).
+      val qual = Materialize.truncate(TextAnalysis
         .hashedQualityScores(docs, col("doc_id"), col("text"))
         .select(col("doc_id"),
-          TextAnalysis.qualityDensityMilli(col("logit_milli"), col("n_tokens")).as("__dq"))
-        .localCheckpoint()
-      val dsir = TextAnalysis
+          TextAnalysis.qualityDensityMilli(col("logit_milli"), col("n_tokens")).as("__dq")))
+      val dsir = Materialize.truncate(TextAnalysis
         .dsirWeights(docs, col("doc_id"), col("text"),
           isTarget = col("source") === "src1")
-        .select(col("doc_id"), col("dsir_ppm"))
-        .localCheckpoint()
+        .select(col("doc_id"), col("dsir_ppm")))
       // keyBounds on the quality side (density ∈ [0, 2000] by
       // construction — the q192 argument) stays: out-of-bounds keys
       // raise, never mis-shard, and the discovery branch is gone.

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{Multimodal, TextDedup}
+import graft.operators.{Materialize, Multimodal, TextDedup}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType, TimestampType}
@@ -85,11 +85,10 @@ object MediaStream {
     // this persist every WAV payload is container-decoded twice per
     // batch; the persist in hammingGateAndLand lands only on the final
     // (doc_id, sh) fingerprints, AFTER both decodes would have run
-    val frames = Multimodal.decodeAudioFrames(batch)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try hammingGateAndLand(
-      Multimodal.audioHash64(frames), historyDir, maxHamming, bands, batchId, cadence)
-    finally { frames.unpersist(); () }
+    Materialize.scoped(Multimodal.decodeAudioFrames(batch)) { frames =>
+      hammingGateAndLand(
+        Multimodal.audioHash64(frames), historyDir, maxHamming, bands, batchId, cadence)
+    }
   }
 
   /** The video twin: AVI clips container-walked + frame-decoded ONCE
@@ -106,11 +105,10 @@ object MediaStream {
     // same decode-once persist as the audio sink — envelopeHash64
     // reads its input twice, and an AVI chunk-walk + per-frame PNG
     // decode is the most expensive step in the whole gate
-    val frames = Multimodal.decodeVideoFrames(batch)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try hammingGateAndLand(
-      Multimodal.videoHash64(frames), historyDir, maxHamming, bands, batchId, cadence)
-    finally { frames.unpersist(); () }
+    Materialize.scoped(Multimodal.decodeVideoFrames(batch)) { frames =>
+      hammingGateAndLand(
+        Multimodal.videoHash64(frames), historyDir, maxHamming, bands, batchId, cadence)
+    }
   }
 
   /** CROSS-MODAL video ingest gate — q209/q213's streaming twin: each
@@ -154,14 +152,10 @@ object MediaStream {
         "would silently disable the cross-modal veto; fix the path (or land " +
         "the image index first)")
     val kf = Multimodal.videoKeyframes(batch, everyK)
+      .select(Multimodal.keyframeId(col("doc_id"), col("frame_idx")).as("doc_id"), col("payload"))
     // one container walk + one hash pass per batch, reused by all
     // three veto layers AND the final landing write
-    val kfHashes = Multimodal.aHash64(
-        kf.select(
-          Multimodal.keyframeId(col("doc_id"), col("frame_idx")).as("doc_id"),
-          col("payload")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.scoped(Multimodal.aHash64(kf)) { kfHashes =>
       // EXACT layer first (the hammingGateAndLand discipline — a
       // dup-dense batch must never pay |group|² band candidates): one
       // rep per distinct hash; every batch clip holding a hash whose
@@ -169,46 +163,44 @@ object MediaStream {
       // pair join + both index probes run on REPS only. Provably the
       // same veto set: reps carry every distinct hash, and group
       // members inherit their rep's collisions (identical hash).
-      val reps = kfHashes.groupBy(col("sh")).agg(min(col("doc_id")).as("doc_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val exactVeto = kfHashes.as("m")
-        .join(reps.select(col("sh"), col("doc_id").as("__rep")), "sh")
-        .filter(Multimodal.keyframeVideoId(col("m.doc_id")) =!=
-          Multimodal.keyframeVideoId(col("__rep")))
-        .select(Multimodal.keyframeVideoId(col("m.doc_id")).as("video_id"))
-      // (c) within-batch cross-clip near-dups over reps: packed ids
-      // order by (video, frame), so doc_a < doc_b implies
-      // video_a <= video_b — the HIGHER clip drops
-      val withinVeto = TextDedup
-        .simhashPairsFromHashes(reps, maxHamming, bands)
-        .filter(
-          Multimodal.keyframeVideoId(col("doc_a")) =!=
-            Multimodal.keyframeVideoId(col("doc_b")))
-        .select(Multimodal.keyframeVideoId(col("doc_b")).as("video_id"))
-      // a probe hit on a rep vetoes EVERY batch clip holding that
-      // hash (group members share it), not just the rep's own clip
-      def expandToVideos(hitReps: DataFrame): DataFrame =
-        hitReps.join(reps, "doc_id").select(col("sh"))
-          .join(kfHashes, "sh")
-          .select(Multimodal.keyframeVideoId(col("doc_id")).as("video_id"))
-      // (a) the foreign image index — committed view, nothing excluded
-      // (image batch ids live in a different table's sequence)
-      val imageIndex = IndexRead.committedParquet(spark, imageIndexDir, -999L)(
-          Seq.empty[(Long, Long)].toDF("doc_id", "sh").withColumn("batch_id", lit(-1L)))
-        .select(col("doc_id"), col("sh"))
-      val imageVeto = expandToVideos(TextDedup
-        .simhashProbeIndex(reps, imageIndex, maxHamming, bands)
-        .select(col("doc_id")))
-      // (b) own growing index of admitted clips' keyframes
-      val ownIndex = IndexRead.committedParquet(spark, historyDir, batchId)(
-          Seq.empty[(Long, Long)].toDF("doc_id", "sh").withColumn("batch_id", lit(-1L)))
-        .select(col("doc_id"), col("sh"))
-      val ownVeto = expandToVideos(TextDedup
-        .simhashProbeIndex(reps, ownIndex, maxHamming, bands)
-        .select(col("doc_id")))
-      val vetoed = exactVeto.unionByName(withinVeto)
-        .unionByName(imageVeto).unionByName(ownVeto).distinct()
-      try {
+      Materialize.scoped(kfHashes.groupBy(col("sh")).agg(min(col("doc_id")).as("doc_id"))) { reps =>
+        val exactVeto = kfHashes.as("m")
+          .join(reps.select(col("sh"), col("doc_id").as("__rep")), "sh")
+          .filter(Multimodal.keyframeVideoId(col("m.doc_id")) =!=
+            Multimodal.keyframeVideoId(col("__rep")))
+          .select(Multimodal.keyframeVideoId(col("m.doc_id")).as("video_id"))
+        // (c) within-batch cross-clip near-dups over reps: packed ids
+        // order by (video, frame), so doc_a < doc_b implies
+        // video_a <= video_b — the HIGHER clip drops
+        val withinVeto = TextDedup
+          .simhashPairsFromHashes(reps, maxHamming, bands)
+          .filter(
+            Multimodal.keyframeVideoId(col("doc_a")) =!=
+              Multimodal.keyframeVideoId(col("doc_b")))
+          .select(Multimodal.keyframeVideoId(col("doc_b")).as("video_id"))
+        // a probe hit on a rep vetoes EVERY batch clip holding that
+        // hash (group members share it), not just the rep's own clip
+        def expandToVideos(hitReps: DataFrame): DataFrame =
+          hitReps.join(reps, "doc_id").select(col("sh"))
+            .join(kfHashes, "sh")
+            .select(Multimodal.keyframeVideoId(col("doc_id")).as("video_id"))
+        // (a) the foreign image index — committed view, nothing excluded
+        // (image batch ids live in a different table's sequence)
+        val imageIndex = IndexRead.committedParquet(spark, imageIndexDir, -999L)(
+            Seq.empty[(Long, Long)].toDF("doc_id", "sh").withColumn("batch_id", lit(-1L)))
+          .select(col("doc_id"), col("sh"))
+        val imageVeto = expandToVideos(TextDedup
+          .simhashProbeIndex(reps, imageIndex, maxHamming, bands)
+          .select(col("doc_id")))
+        // (b) own growing index of admitted clips' keyframes
+        val ownIndex = IndexRead.committedParquet(spark, historyDir, batchId)(
+            Seq.empty[(Long, Long)].toDF("doc_id", "sh").withColumn("batch_id", lit(-1L)))
+          .select(col("doc_id"), col("sh"))
+        val ownVeto = expandToVideos(TextDedup
+          .simhashProbeIndex(reps, ownIndex, maxHamming, bands)
+          .select(col("doc_id")))
+        val vetoed = exactVeto.unionByName(withinVeto)
+          .unionByName(imageVeto).unionByName(ownVeto).distinct()
         kfHashes
           .withColumn("video_id", Multimodal.keyframeVideoId(col("doc_id")))
           .join(vetoed, Seq("video_id"), "left_anti")
@@ -221,8 +213,8 @@ object MediaStream {
           .parquet(historyDir)
         IndexRead.commit(spark, historyDir, batchId)
         IndexRead.maintainAfterCommit(spark, historyDir, batchId, cadence)
-      } finally { reps.unpersist(); () }
-    } finally { kfHashes.unpersist(); () }
+      }
+    }
   }
 
   /** Shared gate body over a (doc_id, sh) fingerprint relation — the
@@ -236,9 +228,7 @@ object MediaStream {
       cadence: IndexRead.Cadence): Unit = {
     val spark = fingerprints.sparkSession
     import spark.implicits._
-    val hashed = fingerprints
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.scoped(fingerprints) { hashed =>
       // EXACT layer first (the text-dedup discipline): identical
       // fingerprints collapse to their keep-min representative in one
       // hash-agg BEFORE the banded pair join. Provably the same admit
@@ -279,7 +269,7 @@ object MediaStream {
       // the partition is complete — one marker PUT makes it visible
       IndexRead.commit(spark, historyDir, batchId)
       IndexRead.maintainAfterCommit(spark, historyDir, batchId, cadence)
-    } finally { hashed.unpersist(); () }
+    }
   }
 
   /** Wire [[aHashGatedBatchSink]] onto a media stream. */

@@ -398,20 +398,6 @@ class TextDedupSpec extends SparkSpec {
     assert(out.values.forall(_ === 0L)) // one component, min label 0
   }
 
-  test("starContract: checkpoint strategy is pluggable (none/reliable)") {
-    val s = spark; import s.implicits._
-    val pairs = Seq((5L, 3L), (3L, 9L), (20L, 21L)).toDF("doc_a", "doc_b")
-    val expected = Map(3L -> 3L, 5L -> 3L, 9L -> 3L, 20L -> 20L, 21L -> 20L)
-    val none = TextDedup.starContract(pairs, checkpoint = TextDedup.Checkpoint.none)._1
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(none === expected)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    val reliable = TextDedup.starContract(pairs, checkpoint = TextDedup.Checkpoint.reliable)._1
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(reliable === expected)
-  }
-
   test("simhash: identical text → identical 32-bit hash; near-dup → small hamming") {
     val sh = TextDedup.simhashes(docs, col("doc_id"), col("text"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
